@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from debezium_server_batch_spark.frames import local_frame  # noqa: E402
 from debezium_server_batch_spark.functions.text import (  # noqa: E402
     repetition_features,
     top_bigram_ratio,
@@ -46,10 +47,9 @@ def _warm_session() -> None:
     and imports this module second).
 
     A cold JVM charges its one-time initialization — Janino/whole-stage
-    codegen compilation, JIT of the aggregate/shuffle/parquet hot loops,
-    Arrow + Python-worker spin-up — to whichever query happens to run
-    first (measured ~6 s on the first groupBy, ~1.5 s on the first
-    pandas UDF, vs 0.7 s steady-state for the same query). That cost is
+    codegen compilation, JIT of the aggregate/shuffle/parquet hot loops —
+    to whichever query happens to run first (measured ~6 s on the first
+    groupBy vs 0.7 s steady-state for the same query). That cost is
     engine initialization, not operator work, and any long-running
     service pays it once at startup; amortizing it here makes per-query
     timings measure the operators.
@@ -146,17 +146,6 @@ def _warm_session() -> None:
                 F.from_json("v", "payload struct<a:long,b:string>").alias("e"),
             ).select("h", "e.payload.*")
         )
-        # one batch through EVERY Python worker: Arrow + worker spin-up
-        import pandas as pd  # noqa: PLC0415
-
-        @F.pandas_udf("string")
-        def _ident(s: pd.Series) -> pd.Series:
-            return s
-
-        par = spark.sparkContext.defaultParallelism
-        spark.range(0, 100 * par, 1, par).select(
-            _ident(F.col("id").cast("string")).alias("s")
-        ).agg(F.count(F.lit(1))).first()
     except Exception:  # pragma: no cover - warm-up must never break a run
         pass
     finally:
@@ -878,7 +867,7 @@ def q_cdc_time_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # materialize before dropping the temp table files
         rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
+        return local_frame(spark, rows, out.schema)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
@@ -920,7 +909,7 @@ def q_cdc_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
         )
         rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
+        return local_frame(spark, rows, out.schema)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
@@ -994,7 +983,7 @@ def q_cdc_rescale(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
         )
         rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
+        return local_frame(spark, rows, out.schema)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
@@ -1087,7 +1076,7 @@ def q_cdc_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
+        return local_frame(spark, rows, out.schema)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 

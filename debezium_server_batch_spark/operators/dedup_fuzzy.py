@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..frames import local_frame
 from ..functions.text import shingles
 
 
@@ -413,7 +414,7 @@ def connected_components(
             schema = T.StructType(
                 [T.StructField("id", id_type), T.StructField("component", id_type)]
             )
-            return pairs.sparkSession.createDataFrame(rows, schema)
+            return local_frame(pairs.sparkSession, rows, schema)
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
@@ -706,9 +707,12 @@ def exact_cosine_pairs(
             out = pd.DataFrame({"id_a": a[keep], "id_b": b[keep]})
             yield out
 
-    cand = df.sparkSession.createDataFrame([], "id_a long, id_b long") if not rows else (
+    pair_schema = T.StructType(
+        [T.StructField("id_a", T.LongType()), T.StructField("id_b", T.LongType())]
+    )
+    cand = local_frame(spark, [], pair_schema) if not rows else (
         df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .mapInPandas(gen_pairs, "id_a long, id_b long")
+        .mapInPandas(gen_pairs, pair_schema)
     )
     return _verify_cosine_pairs(df, cand, id_col, vec_col, threshold)
 

@@ -16,10 +16,18 @@ Spark-first re-expression — everything stays distributed:
      and fingerprints the schema text with ``xxhash64`` — per-row work is
      two JSON pointer lookups + a 64-bit hash, all JVM-side codegen
   3. a tiny aggregation (distinct schema hash → first schema doc,
-     min offset) is collected — #distinct schemas per batch is O(1),
-     bounded by DDL changes inside the batch, so the collect is bytes
+     min offset) is collected and sorted on the driver — #distinct
+     schemas per batch is O(1), bounded by DDL changes inside the batch,
+     so the collect is bytes
   4. per schema-group, ``F.from_json(payload, compiled_struct)`` parses
      rows with an explicit schema (no inference pass over the data)
+  5. S5, schemas disabled: a group without a schema document infers its
+     struct in the JVM with ``spark.read.json`` over the group's payload
+     strings as a ``Dataset[String]`` — the reference's call
+     (BatchSparkChangeConsumer.java:93-96). Nothing is collected to the
+     driver and no Python worker starts. A group with no payload
+     document at all (every envelope unparseable) gets an empty struct
+     and no inference job; the runner quarantines it.
 
 At 100 TB this plan is: one scan with pushed filters, a shuffle only for
 the distinct-schemas agg (32 rows), then per-group narrow projections.
@@ -63,6 +71,9 @@ class SchemaGroup:
     # normally, several when coalesce_schemas merged schema epochs;
     # feeds the runner's known-schema cache for the optimistic fast path
     member_schemas: list[tuple] | None = None
+    # the group's raw event-log rows (the input's own columns) — what the
+    # dead-letter spool writes when the whole group is quarantined
+    raw: DataFrame | None = None
     _source: DataFrame | None = None  # persisted split-envelope df, if any
 
 
@@ -102,11 +113,25 @@ def split_envelope(df: DataFrame) -> DataFrame:
     ).withColumn("schema_hash", F.coalesce(F.xxhash64("schema_str"), F.lit(0)))
 
 
-def _infer_struct(spark, payload_samples: list[str]) -> T.StructType:
-    """S5 fallback: infer a schema from driver-collected sample payloads
-    (schemas disabled). Used only off the hot path."""
-    sdf = spark.createDataFrame([(s,) for s in payload_samples], "payload string")
-    return spark.read.json(sdf.rdd.map(lambda r: r.payload)).schema
+def _infer_struct(payloads: DataFrame, samples: int | None = None) -> T.StructType:
+    """S5 fallback (schemas disabled): infer a struct from a one-column
+    DataFrame of payload JSON strings, JVM-side — ``spark.read.json`` over
+    it as a ``Dataset[String]`` (BatchSparkChangeConsumer.java:93-96).
+    Null strings are skipped; ``samples`` caps the non-null rows read."""
+    spark = payloads.sparkSession
+    strings = payloads.toDF("json").filter(F.col("json").isNotNull())
+    if samples is not None:
+        strings = strings.limit(samples)
+    jstrings = getattr(strings._jdf, "as")(spark._jvm.org.apache.spark.sql.Encoders.STRING())
+    inferred = spark._jsparkSession.read().json(jstrings).schema().json()
+    return T.StructType.fromJson(json.loads(inferred))
+
+
+def _group_order(row) -> tuple:
+    """Driver-side sort key of a group-metadata row: (destination,
+    min offset) ascending, nulls first — Spark's orderBy order."""
+    d, o = row[DESTINATION], row["min_offset"]
+    return (d is not None, d or "", o is not None, o or 0)
 
 
 def parse_envelope_batch(
@@ -137,7 +162,6 @@ def parse_envelope_batch(
     downstream action. Caller must call ``unpersist_batch(groups)`` when
     the window is fully merged.
     """
-    spark = df.sparkSession
     ev = split_envelope(filter_tombstones(df))
     if persist:
         ev = ev.persist()
@@ -146,6 +170,14 @@ def parse_envelope_batch(
         F.first("schema_str", ignorenulls=True).alias("schema_str"),
         F.min(OFFSET).alias("min_offset"),
         F.count(F.lit(1)).alias("n"),
+        # schema-less rows only (the CASE skips the pointer for the
+        # rest): does the group hold any payload document to infer from?
+        F.max(
+            F.when(
+                F.col("schema_str").isNull(),
+                F.get_json_object(F.col(VALUE), "$.payload").isNotNull(),
+            )
+        ).alias("has_payload"),
     ]
     if extract_key_schema:
         # key schema (the per-destination PK definition): one extra JSON
@@ -157,8 +189,10 @@ def parse_envelope_batch(
                 "key_schema_str"
             ),
         )
-    groups_meta = (
-        ev.groupBy(DESTINATION, "schema_hash").agg(*aggs).orderBy(DESTINATION, "min_offset").collect()
+    # O(#groups) rows: sorting them here saves the exchange and the
+    # range-sampling job an orderBy would add to the aggregate
+    groups_meta = sorted(
+        ev.groupBy(DESTINATION, "schema_hash").agg(*aggs).collect(), key=_group_order
     )
 
     def typed_parse(grp: DataFrame, struct: T.StructType) -> DataFrame:
@@ -181,68 +215,55 @@ def parse_envelope_batch(
             member_schemas=members
             if members is not None
             else [(row["schema_hash"], row["schema_str"])],
+            raw=grp_df.select(*df.columns),
             _source=ev if persist else None,
         )
 
-    out: list[SchemaGroup] = []
-    if coalesce_schemas:
-        by_dest: dict[str, list] = {}
-        for row in groups_meta:
-            by_dest.setdefault(row[DESTINATION], []).append(row)
-        for dest in sorted(by_dest):
-            rows = by_dest[dest]
-            schemaful = [r for r in rows if r["schema_str"] is not None]
-            if len(schemaful) > 1:
-                from ..plans.laketable import evolve_schema
-
-                union = compile_connect_schema(schemaful[0]["schema_str"])
-                for r in schemaful[1:]:  # min_offset order → log order
-                    union, _ = evolve_schema(union, compile_connect_schema(r["schema_str"]))
-                grp = ev.filter(
-                    (F.col(DESTINATION) == dest)
-                    & F.col("schema_hash").isin([r["schema_hash"] for r in schemaful])
-                )
-                out.append(
-                    mk_group(
-                        schemaful[0],
-                        union,
-                        grp,
-                        sum(r["n"] for r in schemaful),
-                        members=[(r["schema_hash"], r["schema_str"]) for r in schemaful],
-                    )
-                )
-                rows = [r for r in rows if r["schema_str"] is None]
-            # a single schema group (or inference groups) use the per-group path
-            for row in rows:
-                struct = compile_connect_schema(row["schema_str"])
-                grp = ev.filter(
-                    (F.col(DESTINATION) == dest) & (F.col("schema_hash") == row["schema_hash"])
-                )
-                if struct is None:
-                    samples = [
-                        r[0]
-                        for r in grp.select(F.get_json_object(F.col(VALUE), "$.payload"))
-                        .limit(infer_samples)
-                        .collect()
-                    ]
-                    struct = _infer_struct(spark, samples)
-                out.append(mk_group(row, struct, grp, row["n"]))
-        return out
-
-    for row in groups_meta:
-        struct = compile_connect_schema(row["schema_str"])
+    def single_group(row) -> SchemaGroup:
         grp = ev.filter(
             (F.col(DESTINATION) == row[DESTINATION]) & (F.col("schema_hash") == row["schema_hash"])
         )
+        struct = compile_connect_schema(row["schema_str"])
         if struct is None:
-            samples = [
-                r[0]
-                for r in grp.select(F.get_json_object(F.col(VALUE), "$.payload"))
-                .limit(infer_samples)
-                .collect()
-            ]
-            struct = _infer_struct(spark, samples)
-        out.append(mk_group(row, struct, grp, row["n"]))
+            # S5: infer JVM-side; a group with no payload document has
+            # nothing to infer from and skips the job (empty struct)
+            struct = T.StructType([])
+            if row["has_payload"]:
+                payloads = grp.select(F.get_json_object(F.col(VALUE), "$.payload"))
+                struct = _infer_struct(payloads, infer_samples)
+        return mk_group(row, struct, grp, row["n"])
+
+    if not coalesce_schemas:
+        return [single_group(row) for row in groups_meta]
+
+    out: list[SchemaGroup] = []
+    by_dest: dict[str, list] = {}
+    for row in groups_meta:
+        by_dest.setdefault(row[DESTINATION], []).append(row)
+    for rows in by_dest.values():  # groups_meta order: by destination
+        schemaful = [r for r in rows if r["schema_str"] is not None]
+        if len(schemaful) > 1:
+            from ..plans.laketable import evolve_schema
+
+            union = compile_connect_schema(schemaful[0]["schema_str"])
+            for r in schemaful[1:]:  # min_offset order → log order
+                union, _ = evolve_schema(union, compile_connect_schema(r["schema_str"]))
+            grp = ev.filter(
+                (F.col(DESTINATION) == schemaful[0][DESTINATION])
+                & F.col("schema_hash").isin([r["schema_hash"] for r in schemaful])
+            )
+            out.append(
+                mk_group(
+                    schemaful[0],
+                    union,
+                    grp,
+                    sum(r["n"] for r in schemaful),
+                    members=[(r["schema_hash"], r["schema_str"]) for r in schemaful],
+                )
+            )
+            rows = [r for r in rows if r["schema_str"] is None]
+        # a single schema group (or inference groups) use the per-group path
+        out.extend(single_group(row) for row in rows)
     return out
 
 

@@ -25,7 +25,9 @@ import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from debezium_server_batch_spark.frames import local_frame
 from debezium_server_batch_spark.operators.sampling import global_running_total
 
 
@@ -526,8 +528,10 @@ def export_incremental(
         # anti-join against the O(touched) id list, recomputed rows
         # replace the touched ones (man is checkpointed, so the
         # overwrite of its own source files is safe)
-        touched_df = spark.createDataFrame(
-            [(int(s),) for s in touched], "shard_id long"
+        touched_df = local_frame(
+            spark,
+            [(int(s),) for s in touched],
+            T.StructType([T.StructField("shard_id", T.LongType())]),
         )
         man_new = man.join(
             F.broadcast(touched_df), "shard_id", "left_anti"

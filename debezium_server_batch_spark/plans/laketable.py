@@ -47,6 +47,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..frames import local_frame
+
 
 class SchemaEvolutionError(ValueError):
     pass
@@ -672,11 +674,13 @@ class LakeTable:
     def read_keys(self, keys: list, version: int | None = None) -> DataFrame:
         """Point lookup: current live rows for the given key values.
 
-        Computes each key's hash bucket DRIVER-SIDE (same xxhash64/pmod
-        the layout uses, evaluated through a tiny local DataFrame so the
-        hash is bit-identical to the write path) and scans only those
-        buckets — O(|keys|/num_buckets of the table) files instead of a
-        full scan, the lookup shape a 10^10-row serving layer needs.
+        Computes each key's hash bucket up front (same xxhash64/pmod
+        the layout uses, evaluated over a tiny key frame so the hash is
+        bit-identical to the write path; the frame is Arrow-built by
+        ``local_frame`` and decoded in the JVM, so a lookup starts no
+        Python worker) and scans only those buckets — O(|keys|/
+        num_buckets of the table) files instead of a full scan, the
+        lookup shape a 10^10-row serving layer needs.
         Inside each bucket, files whose leading-key ZONE MAP (min/max
         recorded at compaction/CoW write) excludes every probed key are
         skipped too — multi-file buckets (day/salt splits) narrow to
@@ -689,10 +693,9 @@ class LakeTable:
         key_cols = self._key_cols(snap)
         rows = [tuple(k) if isinstance(k, (tuple, list)) else (k,) for k in keys]
         if not rows:
-            return self.spark.createDataFrame([], self.schema(snap))
-        kdf = self.spark.createDataFrame(
-            rows,
-            T.StructType([self.schema(snap)[c] for c in key_cols]),
+            return local_frame(self.spark, [], self.schema(snap))
+        kdf = local_frame(
+            self.spark, rows, T.StructType([self.schema(snap)[c] for c in key_cols])
         )
         wanted = sorted(
             {r[0] for r in kdf.select(self._bucket_expr(snap).alias("_b")).distinct().collect()}
@@ -772,7 +775,7 @@ class LakeTable:
         for f in self.file_entries(version, buckets, days, key_values):
             by_schema.setdefault(f["schema_id"], []).append(os.path.join(self.root, f["path"]))
         if not by_schema:
-            return self.spark.createDataFrame([], current)
+            return local_frame(self.spark, [], current)
         parts = []
         for sid, paths in by_schema.items():
             file_schema = T.StructType.fromJson(json.loads(snap["schemas"][sid]))
@@ -1519,7 +1522,7 @@ class LakeTable:
         for f in entries:
             by_schema.setdefault(f["schema_id"], []).append(os.path.join(self.root, f["path"]))
         if not by_schema:
-            return self.spark.createDataFrame([], current)
+            return local_frame(self.spark, [], current)
         parts = []
         for sid, paths in by_schema.items():
             file_schema = T.StructType.fromJson(json.loads(snap["schemas"][sid]))
@@ -1651,7 +1654,7 @@ class LakeTable:
             schema = T.StructType(
                 current.fields + [T.StructField("_commit_version", T.IntegerType(), False)]
             )
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         out = parts[0][1]
         for _, p in parts[1:]:
             out = out.unionByName(p)

@@ -570,11 +570,10 @@ class CdcPipeline:
         """Append the RAW rows of this group's null-key events to the
         DLQ spool. Runs only when the observation reported dead rows —
         one extra scan of the window, paid exclusively by bad batches."""
-        self._capture_dead_letter_offsets(
-            raw, parsed_df.filter(self._null_key_cond(key)).select("offset"), batch_id
-        )
+        dead_off = parsed_df.filter(self._null_key_cond(key)).select("offset")
+        self._spool_dead_letters(raw.join(dead_off, "offset", "left_semi"), batch_id)
 
-    def _capture_dead_letter_offsets(self, raw, dead_off, batch_id: int) -> None:
+    def _spool_dead_letters(self, rows, batch_id: int) -> None:
         # serialized: concurrent parquet appends to ONE path from the
         # parallel per-root merge workers would race on the writer's
         # shared _temporary staging dir (the first job's commit cleans
@@ -583,8 +582,7 @@ class CdcPipeline:
         # so their appends never share a staging dir either.
         with self._dlq_lock:
             (
-                raw.join(dead_off, "offset", "left_semi")
-                .withColumn("batch_id", F.lit(batch_id))
+                rows.withColumn("batch_id", F.lit(batch_id))
                 .withColumn("reason", F.lit("null-merge-key"))
                 .write.mode("append")
                 .parquet(self.dlq_path)
@@ -831,9 +829,8 @@ class CdcPipeline:
                 n_dead = g.row_count_hint or df.count()
                 if self.cfg.dead_letter:
                     _failpoint("dlq_pre_spool", checkpoint["batch_id"])
-                    self._capture_dead_letter_offsets(
-                        raw, df.select("offset"), checkpoint["batch_id"]
-                    )
+                    # the group's own raw rows, one map-only write
+                    self._spool_dead_letters(g.raw, checkpoint["batch_id"])
                 if gi == last_group_idx[roots[gi]] and not ckpt_barrier:
                     t = self._table(destination=g.destination)
                     if t is not None:

@@ -82,13 +82,112 @@ def test_groups_ordered_by_destination_then_offset(raw):
     assert "extra" in [f.name for f in groups[1].struct.fields]
 
 
+RAW_SCHEMA = "offset long, destination string, key string, value string"
+
+
 def test_inference_fallback_without_schema(spark):
     rows = [(0, "t", None, _ev(None, {"id": 1, "name": "x"}))]
-    df = spark.createDataFrame(rows, "offset long, destination string, key string, value string")
+    df = spark.createDataFrame(rows, RAW_SCHEMA)
     groups = parse_envelope_batch(df)
     assert len(groups) == 1
     r = groups[0].df.first()
     assert r["id"] == 1 and r["name"] == "x"
+
+    # S5 runs in the JVM and matches spark.read.json over the same
+    # payload strings: nested structs, arrays, int→double widening, null
+    # fields, and null payloads (skipped by both)
+    payloads = [
+        {"id": 1, "name": "x", "tags": ["a", "b"], "geo": {"lat": 1, "pts": [[1, 2]]}},
+        {"id": 2.5, "name": None, "tags": [], "geo": {"lat": 2.25, "alt": None}},
+        {"id": 3, "extra": None, "geo": None},
+        None,
+    ]
+    rows = [(i, "t", None, _ev(None, p)) for i, p in enumerate(payloads)]
+    groups = parse_envelope_batch(spark.createDataFrame(rows, RAW_SCHEMA))
+    assert len(groups) == 1
+    docs = [json.dumps(p) for p in payloads if p is not None]
+    want = spark.read.json(spark.sparkContext.parallelize(docs)).schema
+    assert groups[0].struct == want
+    assert groups[0].struct["id"].dataType == T.DoubleType()
+    got = {r["offset"]: r for r in groups[0].df.collect()}
+    assert got[1]["id"] == 2.5 and got[0]["geo"]["pts"] == [[1, 2]]
+    assert got[3]["id"] is None
+
+
+def test_unparseable_group_quarantined_without_inference(spark, tmp_path, monkeypatch):
+    from debezium_server_batch_spark.operators import envelope
+    from debezium_server_batch_spark.streaming.runner import CdcPipeline, PipelineConfig
+
+    def no_inference(*_):
+        raise AssertionError("a group without payload documents ran inference")
+
+    monkeypatch.setattr(envelope, "_infer_struct", no_inference)
+    bad = [
+        (10, "t.bad", "k1", '{"schema":null,"payload":{"id":1,'),
+        (11, "t.bad", None, '{"schema":null,"payload":null}'),
+        (12, "t.bad", "k3", "not json"),
+    ]
+    raw = spark.createDataFrame(bad, RAW_SCHEMA)
+    groups = parse_envelope_batch(raw)
+    assert len(groups) == 1 and groups[0].struct == T.StructType([])
+    assert sorted(tuple(r) for r in groups[0].raw.collect()) == bad
+
+    # the runner spools the group's own raw rows, with batch id + reason
+    dlq = str(tmp_path / "dlq")
+    cfg = PipelineConfig(
+        log_path=str(tmp_path / "unused"), table_root=str(tmp_path / "tables"),
+        table_per_destination=True, dead_letter=dlq,
+    )
+    rec = CdcPipeline(spark, cfg).process_batch(raw, batch_id=7, lo=9, hi=12)
+    assert rec["groups"][0]["quarantined_group"] and rec["groups"][0]["dead_letter_rows"] == 3
+    spooled = spark.read.parquet(dlq)
+    assert spooled.columns == ["offset", "destination", "key", "value", "batch_id", "reason"]
+    assert sorted(tuple(r) for r in spooled.collect()) == [
+        (*r, 7, "null-merge-key") for r in bad
+    ]
+
+
+def test_local_frame_round_trips_exact_schema(spark):
+    import datetime
+    from decimal import Decimal
+
+    from debezium_server_batch_spark.frames import local_frame
+
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType(), False),
+            T.StructField("amount", T.DecimalType(18, 6), True),
+            T.StructField("ts", T.TimestampType(), True),
+            T.StructField("day", T.DateType(), True),
+            T.StructField("blob", T.BinaryType(), True),
+            T.StructField("xs", T.ArrayType(T.IntegerType(), True), True),
+            T.StructField("m", T.MapType(T.StringType(), T.DoubleType()), True),
+            T.StructField(
+                "s", T.StructType([T.StructField("a", T.StringType(), True)]), True
+            ),
+        ]
+    )
+    rows = [
+        (
+            1,
+            Decimal("12345.678901"),
+            datetime.datetime(2024, 1, 2, 3, 4, 5, 678901),
+            datetime.date(2024, 2, 29),
+            b"\x00\xffbytes",
+            [1, None, 3],
+            {"k": 0.5},
+            ("v",),
+        ),
+        (2, None, None, None, None, None, None, None),
+        (3, Decimal("-0.000001"), datetime.datetime(1970, 1, 1), None, b"", [], {}, (None,)),
+    ]
+    df = local_frame(spark, rows, schema)
+    assert df.schema == schema
+    assert [tuple(r) for r in df.orderBy("id").collect()] == rows
+    empty = local_frame(spark, [], schema)
+    assert empty.schema == schema and empty.count() == 0
+    with pytest.raises(Exception):
+        local_frame(spark, [(None,) + rows[1][1:]], schema)  # id is not nullable
 
 
 def test_destination_rewrite():
