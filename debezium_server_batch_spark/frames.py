@@ -7,6 +7,14 @@ converts the rows to an Arrow table on the driver under the exact Spark
 schema (names, types, nullability) and hands the Arrow batches to the
 JVM, which decodes them itself. Replay, lookups and the CDC queries use
 it for every frame they build from driver-side values.
+
+The conversion is tied to the bundled Spark 4.1.2 internals:
+``pyspark.sql.conversion.LocalDataToArrowConversion.convert`` (Spark
+Connect's row converter; its ``use_large_var_types`` argument and value
+checks are not public API) and ``pyspark.sql.pandas.types.to_arrow_schema``.
+``tests/test_envelope.py::test_local_frame_round_trips_exact_schema``
+guards both; it fails if a Spark upgrade changes their signature or
+behaviour.
 """
 
 from __future__ import annotations

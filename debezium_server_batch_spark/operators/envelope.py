@@ -113,15 +113,13 @@ def split_envelope(df: DataFrame) -> DataFrame:
     ).withColumn("schema_hash", F.coalesce(F.xxhash64("schema_str"), F.lit(0)))
 
 
-def _infer_struct(payloads: DataFrame, samples: int | None = None) -> T.StructType:
+def _infer_struct(payloads: DataFrame, samples: int) -> T.StructType:
     """S5 fallback (schemas disabled): infer a struct from a one-column
     DataFrame of payload JSON strings, JVM-side — ``spark.read.json`` over
     it as a ``Dataset[String]`` (BatchSparkChangeConsumer.java:93-96).
-    Null strings are skipped; ``samples`` caps the non-null rows read."""
+    Null strings are skipped; the first ``samples`` non-null rows are read."""
     spark = payloads.sparkSession
-    strings = payloads.toDF("json").filter(F.col("json").isNotNull())
-    if samples is not None:
-        strings = strings.limit(samples)
+    strings = payloads.toDF("json").filter(F.col("json").isNotNull()).limit(samples)
     jstrings = getattr(strings._jdf, "as")(spark._jvm.org.apache.spark.sql.Encoders.STRING())
     inferred = spark._jsparkSession.read().json(jstrings).schema().json()
     return T.StructType.fromJson(json.loads(inferred))
