@@ -1,1 +1,1 @@
-from . import dedup, dedup_fuzzy, envelope, multimodal, normalize, relational, similarity  # noqa: F401
+from . import dedup, dedup_fuzzy, envelope, normalize, relational, similarity  # noqa: F401

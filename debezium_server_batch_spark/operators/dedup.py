@@ -4,7 +4,7 @@ The reference never dedups (append-only ledger); the north_rule spec is
 last-writer-wins per url ordered by (__lsn, warc_ts), ties broken by
 offset, so the total order is deterministic and replay is byte-identical.
 
-Three equivalent implementations (property-tested equal):
+Two equivalent implementations (property-tested equal):
 
   * ``lww_window``  — row_number over Window.partitionBy(key). The
     textbook form; skew-fragile: one hot url = one giant partition on
@@ -13,11 +13,9 @@ Three equivalent implementations (property-tested equal):
     plans this as partial_max (map-side combine) → shuffle → final_max,
     so a hot key is pre-reduced on every input partition before the
     shuffle; at 10^10 events with Zipf keys this is the scale winner.
-  * ``lww_salted``  — explicit two-phase salted reduce
-    (groupBy(key, salt) → groupBy(key)) for engines/planners where the
-    partial aggregation can't be relied on; also documents the pattern.
+    The engine's one LWW reduce: merges, LakeTable reads and folds.
 
-All return exactly one row per key with the original columns.
+Both return exactly one row per key with the original columns.
 """
 
 from __future__ import annotations
@@ -66,34 +64,6 @@ def lww_agg(df: DataFrame, key="url", order_by: tuple[str, ...] = DEFAULT_ORDER)
     return (
         df.groupBy(*_keys(key))
         .agg(_max_struct(df, order))
-        .select(*[F.col(f"_m._row.{c}").alias(c) for c in cols])
-    )
-
-
-def lww_salted(
-    df: DataFrame,
-    key="url",
-    order_by: tuple[str, ...] = DEFAULT_ORDER,
-    salt_buckets: int = 64,
-) -> DataFrame:
-    """Explicit two-phase salted reduce for hot-key skew: phase 1 reduces
-    each (key, salt) cell locally — a hot key becomes `salt_buckets`
-    bounded cells spread across the cluster — phase 2 reduces the ≤
-    `salt_buckets` survivors per key. Provably equivalent to lww_agg
-    because max is associative/commutative over the same total order."""
-    order = _order_cols(df, order_by)
-    cols = df.columns
-    keys = _keys(key)
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in order]), F.lit(salt_buckets)).alias("_salt")
-    phase1 = (
-        df.withColumn("_salt", salt)
-        .groupBy(*keys, "_salt")
-        .agg(_max_struct(df.drop("_salt") if "_salt" in df.columns else df, order))
-        .select(*[F.col(k) for k in keys], F.col("_m"))
-    )
-    return (
-        phase1.groupBy(*keys)
-        .agg(F.max("_m").alias("_m"))
         .select(*[F.col(f"_m._row.{c}").alias(c) for c in cols])
     )
 

@@ -167,7 +167,7 @@ def sync_incremental(
         if n == 0:
             dst.commit_checkpoint({**ck, "src_version": cur})
             return stats
-        dst.merge(deduped, checkpoint={**ck, "src_version": cur}, rows_hint=n)
+        dst.merge(deduped, checkpoint={**ck, "src_version": cur})
         return stats
     finally:
         deduped.unpersist()

@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..frames import local_frame
+from ..operators.dedup import lww_agg
 
 
 class SchemaEvolutionError(ValueError):
@@ -96,6 +97,13 @@ _PROMOTIONS: dict[tuple[str, str], str] = {
     ("long", "double"): "double",
     ("float", "double"): "double",
 }
+
+
+# leading-key types whose per-file min/max a bucketed write records as a
+# zone map (values come back as JSON-storable python scalars); footer
+# statistics are exact only for the integral ones
+_FOOTER_ZONE_TYPES = (T.IntegerType, T.LongType, T.ShortType, T.ByteType)
+_ZONE_TYPES = _FOOTER_ZONE_TYPES + (T.StringType, T.FloatType, T.DoubleType, T.BooleanType)
 
 
 def _uri_to_local(uri: str) -> str:
@@ -211,7 +219,6 @@ class LakeTable:
         order_by: tuple[str, ...] = ("__lsn",),
         merge_mode: str = "cow",
         partition_ts_col: str | None = None,
-        delta_layout: str = "unbucketed",
         storage=None,
     ) -> "LakeTable":
         """merge_mode:
@@ -231,22 +238,15 @@ class LakeTable:
         files land under _bucket=N/_day=D and time-ranged reads
         (read(days=...)) scan only matching files.
 
-        delta_layout (merge-on-read tables only):
-          * "unbucketed" — MoR delta writes are MAP-ONLY: no repartition
-            shuffle, no partitionBy; one transient file per upstream
-            task (Hudi-style unsorted log files). The ingest hot path is
-            scan → parse → write with zero shuffles; compact() folds the
-            deltas into the bucketed/day layout. Reads scan all
-            outstanding deltas until compaction (bounded by
-            compact_every).
-          * "bucketed" — deltas shuffle into the bucket/day layout at
-            write time: pre-compaction reads prune, ingest pays the
-            shuffle.
+        MoR deltas are written MAP-ONLY: no repartition shuffle, no
+        partitionBy; one transient file per upstream task (Hudi-style
+        unsorted log files) under the pseudo-bucket "*". The ingest hot
+        path is scan → parse → write with zero shuffles;
+        compact_deltas()/compact() fold the deltas into the bucket/day
+        layout.
         """
         if merge_mode not in ("cow", "mor"):
             raise ValueError(f"merge_mode must be cow|mor, got {merge_mode!r}")
-        if delta_layout not in ("unbucketed", "bucketed"):
-            raise ValueError(f"delta_layout must be unbucketed|bucketed, got {delta_layout!r}")
         t = cls(spark, root, storage=storage)
         t.storage.makedirs(os.path.join(root, cls.META))
         t.storage.makedirs(os.path.join(root, cls.DATA))
@@ -259,7 +259,6 @@ class LakeTable:
             "order_by": list(order_by),
             "merge_mode": merge_mode,
             "partition_ts_col": partition_ts_col,
-            "delta_layout": delta_layout,
             "needs_collapse": False,
             "schemas": {"0": schema.json()},
             "current_schema_id": "0",
@@ -489,7 +488,6 @@ class LakeTable:
         "merge_mode",
         "needs_collapse",
         "partition_ts_col",
-        "delta_layout",
     )
 
     def _carry(self, base: dict) -> dict:
@@ -657,19 +655,10 @@ class LakeTable:
         return df
 
     def _collapse(self, df: DataFrame, snap: dict) -> DataFrame:
-        """LWW per key over order_by — groupBy + max(struct), which Spark
-        executes with map-side partial aggregation (skew-safe)."""
-        keys = self._key_cols(snap)
-        order = [c for c in snap["order_by"] if c in df.columns]
-        if not order:
-            return df
-        payload = F.struct(*[F.col(c) for c in df.columns]).alias("_row")
-        cols = df.columns
-        return (
-            df.groupBy(*keys)
-            .agg(F.max(F.struct(*[F.col(c) for c in order], payload)).alias("_m"))
-            .select(*[F.col(f"_m._row.{c}").alias(c) for c in cols])
-        )
+        """LWW per key over the table's order_by — operators.dedup.lww_agg,
+        the one reduce read() and compact_deltas() share."""
+        order = tuple(c for c in snap["order_by"] if c in df.columns)
+        return lww_agg(df, self._key_cols(snap), order) if order else df
 
     def read_keys(self, keys: list, version: int | None = None) -> DataFrame:
         """Point lookup: current live rows for the given key values.
@@ -770,9 +759,13 @@ class LakeTable:
         key_values: list | None = None,
     ) -> DataFrame:
         snap = self.snapshot(version)
+        return self._read_entries(self.file_entries(snap["version"], buckets, days, key_values), snap)
+
+    def _read_entries(self, entries: list[dict], snap: dict) -> DataFrame:
+        """Conformed union over an explicit manifest-entry list."""
         current = self.schema(snap)
         by_schema: dict[str, list[str]] = {}
-        for f in self.file_entries(version, buckets, days, key_values):
+        for f in entries:
             by_schema.setdefault(f["schema_id"], []).append(os.path.join(self.root, f["path"]))
         if not by_schema:
             return local_frame(self.spark, [], current)
@@ -811,21 +804,24 @@ class LakeTable:
             return "AnalysisException" not in s and "SparkUpgradeException" not in s
         return False
 
-    def _retry_write(self, fn, what: str):
+    @staticmethod
+    def _retry(fn, what: str, retryable, attempts: int, backoff_s: float = 0.0):
+        """Run fn(), retrying up to `attempts` more times while
+        `retryable(error)` holds, with doubling backoff capped at 60 s."""
         import time as _time
         import warnings as _warnings
 
-        delay = self.WRITE_BACKOFF_S
-        for attempt in range(self.WRITE_RETRIES + 1):
+        delay = backoff_s
+        for attempt in range(attempts + 1):
             try:
                 return fn()
-            except Exception as e:  # noqa: BLE001 — classified below
-                if attempt >= self.WRITE_RETRIES or not self._is_transient_write_error(e):
+            except Exception as e:  # noqa: BLE001 — classified by retryable
+                if attempt >= attempts or not retryable(e):
                     raise
                 _warnings.warn(
-                    f"transient {what} failure (attempt {attempt + 1}/"
-                    f"{self.WRITE_RETRIES + 1}), retrying in {delay:.0f}s: {e}",
-                    stacklevel=2,
+                    f"{what} (attempt {attempt + 1}/{attempts + 1}), "
+                    f"retrying in {delay:.0f}s: {e}",
+                    stacklevel=3,
                 )
                 _time.sleep(delay)
                 delay = min(delay * 2, 60.0)
@@ -840,26 +836,21 @@ class LakeTable:
     CONCURRENT_RETRIES = 5
 
     def _retry_concurrent(self, fn, what: str):
-        import warnings as _warnings
-
-        last: ConcurrentCommitError | None = None
-        for attempt in range(self.CONCURRENT_RETRIES + 1):
-            try:
-                return fn()
-            except ConcurrentCommitError as e:
-                last = e
-                if attempt >= self.CONCURRENT_RETRIES:
-                    raise
-                _warnings.warn(
-                    f"{what} lost a commit race (attempt {attempt + 1}/"
-                    f"{self.CONCURRENT_RETRIES + 1}); recomputing from the "
-                    f"current snapshot: {e}",
-                    stacklevel=2,
-                )
-        raise last  # unreachable; keeps type-checkers honest
+        """Recompute-from-current retry: ConcurrentCommitError only, no
+        backoff (the next attempt reads the winner's snapshot)."""
+        return self._retry(
+            fn, f"{what} lost a commit race",
+            lambda e: isinstance(e, ConcurrentCommitError), self.CONCURRENT_RETRIES,
+        )
 
     def _write_files(self, *args, **kwargs) -> dict[str, list[dict]]:
-        return self._retry_write(lambda: self._write_files_once(*args, **kwargs), "bucketed write")
+        return self._retry(
+            lambda: self._write_files_once(*args, **kwargs),
+            "transient write failure",
+            self._is_transient_write_error,
+            self.WRITE_RETRIES,
+            self.WRITE_BACKOFF_S,
+        )
 
     def _write_files_once(
         self,
@@ -869,10 +860,20 @@ class LakeTable:
         rows_hint: int | None = None,
         codec: str | None = None,
         cluster_by_key: bool = False,
+        map_only: bool = False,
     ) -> dict[str, list[dict]]:
-        """Write df bucketed by key (and optionally day-partitioned by
-        the table's partition_ts_col) into a fresh commit dir; return
-        the per-bucket file manifest with row counts.
+        """Write df into a fresh commit dir; return the per-bucket file
+        manifest with row counts.
+
+        Default: bucketed by key (and optionally day-partitioned by the
+        table's partition_ts_col), with leading-key zone maps.
+
+        map_only=True (the MoR delta ingest write): no repartition, no
+        partitionBy — the ingest pipeline stays shuffle-free end to end
+        (scan → parse → write), one transient file per upstream task.
+        Files go under the pseudo-bucket "*" (relevant to every bucket
+        until a fold moves their rows into the real layout) and carry
+        no zone maps, so the hot path pays no key-column scan.
 
         cluster_by_key=True (compaction/rewrite paths — Iceberg's
         sorted rewrite_data_files): instead of the hash salt, rows are
@@ -882,74 +883,72 @@ class LakeTable:
         for point lookups, and parquet row-group min/max stats skip
         under pushed-down key predicates. Costs a range-exchange sample
         pass, which is why the ingest-path writes keep the salt."""
-        commit_id = uuid.uuid4().hex
-        out_dir = os.path.join(self.root, self.DATA, commit_id)
-        # Salt the repartition so the write stage's parallelism tracks the
-        # cluster (distinct _bucket values alone cap it at num_buckets —
-        # and hash collisions leave ~1/e of even those partitions empty).
-        # partitionBy still routes every row to its bucket directory; the
-        # salt only splits a bucket's rows across writers (compaction
-        # folds the extra files). With a rows_hint, the salt is capped so
-        # small batches don't shatter into per-file overhead: target
-        # ≥ ~50k rows per write task.
-        par = self.spark.sparkContext.defaultParallelism
-        n_buckets = snap["num_buckets"]
-        salt_n = max(1, -(-2 * par // n_buckets))  # ceil(2P / buckets)
-        if rows_hint is not None:
-            max_tasks = max(1, rows_hint // 50_000)
-            salt_n = max(1, min(salt_n, -(-max_tasks // n_buckets)))
-        part_cols = ["_bucket"]
-        wdf = df.withColumn("_bucket", self._bucket_expr(snap))
-        ts_col = snap.get("partition_ts_col")
-        if ts_col and ts_col in df.columns:
-            # event-time day partition: days since epoch (Iceberg days());
-            # null timestamps land in day=-1
-            wdf = wdf.withColumn(
-                "_day",
-                F.coalesce(
-                    F.datediff(F.to_date(F.col(ts_col).cast("timestamp")), F.lit("1970-01-01")),
-                    F.lit(-1),
-                ),
-            )
-            part_cols.append("_day")
+        out_dir = os.path.join(self.root, self.DATA, uuid.uuid4().hex)
+        part_cols: list[str] = []
         persisted = None
-        if cluster_by_key:
-            key0 = self._key_cols(snap)[0]
-            n_parts = max(2 * par, n_buckets)
-            if rows_hint is not None:
-                n_parts = max(1, min(n_parts, -(-rows_hint // 50_000)))
-            # repartitionByRange's boundary sampling evaluates the child
-            # a SECOND time — for rewrite paths the child is a full
-            # scan + LWW collapse, so the sample pass re-runs both.
-            # Materialize once (DISK_ONLY: rewrite inputs are table-
-            # sized; no executor-memory pressure) so sampling and the
-            # real exchange read the same materialization (measured
-            # compact 8.0s -> 5-6s at 600k events); released right
-            # after the write below.
-            persisted = wdf.persist(StorageLevel.DISK_ONLY)
-            wdf = persisted
-            writer = (
-                wdf.repartitionByRange(n_parts, *part_cols, F.col(key0))
-                .sortWithinPartitions(*part_cols, key0)
-                .write.partitionBy(*part_cols)
-                .mode("overwrite")
-            )
+        if map_only:
+            writer = df.write.mode("overwrite")
         else:
-            writer = (
-                wdf
-                # independent hash (seeded) — salt = f(bucket) would split nothing
-                .withColumn(
-                    "_wsalt",
-                    F.pmod(
-                        F.xxhash64(F.lit(1), *[F.col(k) for k in self._key_cols(snap)]),
-                        F.lit(salt_n),
+            # Salt the repartition so the write stage's parallelism tracks
+            # the cluster (distinct _bucket values alone cap it at
+            # num_buckets — and hash collisions leave ~1/e of even those
+            # partitions empty). partitionBy still routes every row to its
+            # bucket directory; the salt only splits a bucket's rows across
+            # writers (compaction folds the extra files). With a rows_hint,
+            # the salt is capped so small batches don't shatter into
+            # per-file overhead: target ≥ ~50k rows per write task.
+            par = self.spark.sparkContext.defaultParallelism
+            n_buckets = snap["num_buckets"]
+            salt_n = max(1, -(-2 * par // n_buckets))  # ceil(2P / buckets)
+            if rows_hint is not None:
+                max_tasks = max(1, rows_hint // 50_000)
+                salt_n = max(1, min(salt_n, -(-max_tasks // n_buckets)))
+            part_cols.append("_bucket")
+            wdf = df.withColumn("_bucket", self._bucket_expr(snap))
+            ts_col = snap.get("partition_ts_col")
+            if ts_col and ts_col in df.columns:
+                # event-time day partition: days since epoch (Iceberg
+                # days()); null timestamps land in day=-1
+                wdf = wdf.withColumn(
+                    "_day",
+                    F.coalesce(
+                        F.datediff(F.to_date(F.col(ts_col).cast("timestamp")), F.lit("1970-01-01")),
+                        F.lit(-1),
                     ),
                 )
-                .repartition(max(2 * par, n_buckets), *part_cols, "_wsalt")
-                .drop("_wsalt")
-                .write.partitionBy(*part_cols)
-                .mode("overwrite")
-            )
+                part_cols.append("_day")
+            if cluster_by_key:
+                key0 = self._key_cols(snap)[0]
+                n_parts = max(2 * par, n_buckets)
+                if rows_hint is not None:
+                    n_parts = max(1, min(n_parts, -(-rows_hint // 50_000)))
+                # repartitionByRange's boundary sampling evaluates the
+                # child a SECOND time — for rewrite paths the child is a
+                # full scan + LWW collapse, so the sample pass re-runs
+                # both. Materialize once (DISK_ONLY: rewrite inputs are
+                # table-sized; no executor-memory pressure) so sampling
+                # and the real exchange read the same materialization
+                # (measured compact 8.0s -> 5-6s at 600k events);
+                # released right after the write below.
+                persisted = wdf.persist(StorageLevel.DISK_ONLY)
+                wdf = persisted.repartitionByRange(n_parts, *part_cols, F.col(key0)).sortWithinPartitions(
+                    *part_cols, key0
+                )
+            else:
+                wdf = (
+                    wdf
+                    # independent hash (seeded) — salt = f(bucket) would split nothing
+                    .withColumn(
+                        "_wsalt",
+                        F.pmod(
+                            F.xxhash64(F.lit(1), *[F.col(k) for k in self._key_cols(snap)]),
+                            F.lit(salt_n),
+                        ),
+                    )
+                    .repartition(max(2 * par, n_buckets), *part_cols, "_wsalt")
+                    .drop("_wsalt")
+                )
+            writer = wdf.write.partitionBy(*part_cols).mode("overwrite")
         if codec:
             writer = writer.option("compression", codec)
         try:
@@ -957,93 +956,83 @@ class LakeTable:
         finally:
             if persisted is not None:
                 persisted.unpersist()
-
-        manifest: dict[str, list[dict]] = {}
-        if not any(e.startswith("_bucket=") for e in self._data_fs_names(out_dir)):
-            return manifest
-        # Per-file row counts from a DISTRIBUTED metadata scan (projection
-        # is _metadata.file_path + partition columns + the first key
-        # column, so executors read footers plus one column's pages). A
-        # driver-side per-file footer crawl serializes the commit on the
-        # driver at object-storage latencies once a commit has thousands
-        # of files. The min/max of the leading key column per file is a
-        # ZONE MAP: read_keys prunes files inside a bucket whose range
-        # excludes every probed key — the Iceberg column-stats skip,
-        # recorded only on bucketed (compaction/CoW) writes so the
-        # map-only MoR ingest path pays nothing.
         key0 = self._key_cols(snap)[0]
-        # r7 fast path: LOCAL paths with few files read their footers on
-        # the driver (~1 ms/file) instead of paying a Spark job
-        # (~0.3-0.5 s fixed cost per micro-batch write). Zone maps come
-        # from footer statistics ONLY for integral keys, where parquet
-        # stats are exact; string/float keys keep the distributed
-        # min/max aggregate (parquet may truncate string stats — a
-        # truncated bound is sound for pruning but would diverge from
-        # the aggregate the manifest always recorded). Remote stores and
-        # big commits keep the distributed scan.
-        key_dtype = self.schema(snap)[key0].dataType if key0 in [f.name for f in self.schema(snap).fields] else None
-        zone_by_footer = isinstance(
-            key_dtype, (T.IntegerType, T.LongType, T.ShortType, T.ByteType)
-        )
-        local = self._local_footer_entries(out_dir, key0 if zone_by_footer else None)
-        if local is not None and (zone_by_footer or key_dtype is None or not isinstance(
-            key_dtype,
-            (T.IntegerType, T.LongType, T.ShortType, T.ByteType, T.StringType,
-             T.FloatType, T.DoubleType, T.BooleanType),
-        )):
-            for path, rows, parts, zone in local:
-                rel = os.path.relpath(path, _uri_to_local(self.root))
-                entry = {"path": rel, "rows": rows, "schema_id": schema_id}
-                if "_day" in parts:
-                    entry["day"] = int(parts["_day"])
-                if zone is not None:
-                    entry["kmin"], entry["kmax"] = zone
-                manifest.setdefault(str(int(parts["_bucket"])), []).append(entry)
-            for b in manifest:
-                manifest[b].sort(key=lambda e: e["path"])
-            return manifest
-        back = self.spark.read.parquet(out_dir)
-        aggs = [F.count(F.lit(1)).alias("_n")]
-        # zone types: only keys whose min/max come back as JSON-storable
-        # python scalars — anything else (date/timestamp/decimal/binary/
-        # complex) must not even pay the key-column read in the metadata
-        # scan, since its result would be discarded
-        with_zone = key0 in back.columns and isinstance(
-            back.schema[key0].dataType,
-            (
-                T.StringType,
-                T.IntegerType,
-                T.LongType,
-                T.ShortType,
-                T.ByteType,
-                T.FloatType,
-                T.DoubleType,
-                T.BooleanType,
-            ),
-        )
-        if with_zone:
-            aggs += [F.min(key0).alias("_kmin"), F.max(key0).alias("_kmax")]
-        counts = (
-            back.groupBy(F.col("_metadata.file_path").alias("_path"), *part_cols)
-            .agg(*aggs)
-            .collect()
-        )
-        for r in counts:
-            rel = os.path.relpath(_uri_to_local(r["_path"]), self.root)
-            entry = {"path": rel, "rows": r["_n"], "schema_id": schema_id}
-            if len(part_cols) > 1:
-                entry["day"] = r["_day"]
-            if with_zone and isinstance(r["_kmin"], (str, int, float, bool)):
-                entry["kmin"], entry["kmax"] = r["_kmin"], r["_kmax"]
-            manifest.setdefault(str(r["_bucket"]), []).append(entry)
-        for b in manifest:
-            manifest[b].sort(key=lambda e: e["path"])
-        return manifest
+        zone_field = None if map_only or key0 not in df.columns else df.schema[key0]
+        return self._manifest_entries(out_dir, schema_id, part_cols, zone_field)
 
     # driver-side footer crawl bound: above this many files the commit
     # goes back to the distributed metadata scan (the driver crawl would
-    # serialize the commit; see _write_files_once)
+    # serialize the commit; see _manifest_entries)
     MAX_DRIVER_FOOTER_FILES = 256
+
+    def _manifest_entries(
+        self,
+        out_dir: str,
+        schema_id: str,
+        part_cols: list[str],
+        zone_field: T.StructField | None,
+    ) -> dict[str, list[dict]]:
+        """Manifest entries of a just-written commit dir, keyed by
+        bucket ("*" for a dir without _bucket partitions): path, rows,
+        schema_id, day (if day-partitioned), and [kmin, kmax] of
+        `zone_field` when its type gets a zone map (_ZONE_TYPES). The
+        zone map is what read_keys uses to skip files inside a bucket
+        whose key range excludes every probed key — the Iceberg
+        column-stats skip. 0-row files (an empty map-only write still
+        emits one) get no entry.
+
+        LOCAL dirs of at most MAX_DRIVER_FOOTER_FILES files read their
+        parquet footers on the driver (~1 ms/file) instead of paying a
+        Spark job (~0.3-0.5 s fixed cost per micro-batch write). Footer
+        statistics give the zone only for integral keys, where they are
+        exact; string/float/bool keys keep the distributed min/max
+        aggregate (parquet may truncate string stats — a truncated bound
+        is sound for pruning but would diverge from the aggregate the
+        manifest always recorded). Remote stores and big commits run the
+        DISTRIBUTED metadata scan: _metadata.file_path + partition
+        columns + the zone column, so executors read footers plus one
+        column's pages instead of the driver serializing the commit at
+        object-storage latencies."""
+        if not any(n.startswith("_bucket=") or n.endswith(".parquet") for n in self._data_fs_names(out_dir)):
+            return {}
+        zone_key = zone_field.name if zone_field is not None and isinstance(zone_field.dataType, _ZONE_TYPES) else None
+        footer_zone = zone_key is not None and isinstance(zone_field.dataType, _FOOTER_ZONE_TYPES)
+        files = None
+        if zone_key is None or footer_zone:
+            files = self._local_footer_entries(out_dir, zone_key)
+        if files is None:
+            aggs = [F.count(F.lit(1)).alias("_n")]
+            if zone_key is not None:
+                aggs += [F.min(zone_key).alias("_kmin"), F.max(zone_key).alias("_kmax")]
+            stats = (
+                self.spark.read.parquet(out_dir)
+                .groupBy(F.col("_metadata.file_path").alias("_path"), *part_cols)
+                .agg(*aggs)
+                .collect()
+            )
+            files = [
+                (
+                    _uri_to_local(r["_path"]),
+                    r["_n"],
+                    {c: r[c] for c in part_cols},
+                    (r["_kmin"], r["_kmax"]) if zone_key is not None and r["_kmin"] is not None else None,
+                )
+                for r in stats
+            ]
+        manifest: dict[str, list[dict]] = {}
+        for path, rows, parts, zone in files:
+            if not rows:
+                continue
+            entry = {"path": os.path.relpath(path, _uri_to_local(self.root)), "rows": rows, "schema_id": schema_id}
+            if "_day" in parts:
+                entry["day"] = int(parts["_day"])
+            if zone is not None:
+                entry["kmin"], entry["kmax"] = zone
+            bucket = str(int(parts["_bucket"])) if "_bucket" in parts else "*"
+            manifest.setdefault(bucket, []).append(entry)
+        for entries in manifest.values():
+            entries.sort(key=lambda e: e["path"])
+        return manifest
 
     def _local_footer_entries(self, out_dir: str, zone_key: str | None = None):
         """Parquet footers of a just-written LOCAL output dir, read on
@@ -1097,11 +1086,6 @@ class LakeTable:
             out.append((f, md.num_rows, parts, zone))
         return out
 
-    def _write_delta_files(self, *args, **kwargs) -> dict:
-        return self._retry_write(
-            lambda: self._write_delta_files_once(*args, **kwargs), "delta write"
-        )
-
     def _data_fs_names(self, out_dir: str) -> list[str]:
         """Child entry names of a just-written output dir, resolved on
         the DATA filesystem — the FS Spark's writer actually targeted
@@ -1118,52 +1102,6 @@ class LakeTable:
         if not fs.exists(path):
             return []
         return [st.getPath().getName() for st in fs.listStatus(path)]
-
-    def _write_delta_files_once(self, df: DataFrame, schema_id: str, codec: str = "snappy") -> dict:
-        """MAP-ONLY delta write (unbucketed MoR layout): no repartition,
-        no partitionBy — the ingest pipeline stays shuffle-free end to
-        end (scan → parse → write), one transient file per upstream
-        task. Files go under the pseudo-bucket "*" (relevant to every
-        bucket until compact() folds them into the real layout)."""
-        commit_id = uuid.uuid4().hex
-        out_dir = os.path.join(self.root, self.DATA, commit_id)
-        w = df.write.mode("overwrite")
-        if codec:
-            w = w.option("compression", codec)
-        w.parquet(out_dir)
-        if not any(f.endswith(".parquet") for f in self._data_fs_names(out_dir)):
-            return {}
-        # r7: local few-file delta commits read row counts from parquet
-        # footers on the driver (exact; no zone maps on the delta path)
-        # instead of a Spark job — see _write_files_once
-        local = self._local_footer_entries(out_dir)
-        if local is not None:
-            entries = [
-                {
-                    "path": os.path.relpath(path, _uri_to_local(self.root)),
-                    "rows": rows,
-                    "schema_id": schema_id,
-                }
-                for path, rows, _parts, _zone in local
-            ]
-            return {"*": entries}
-        counts = (
-            self.spark.read.parquet(out_dir)
-            .groupBy(F.col("_metadata.file_path").alias("_path"))
-            .count()
-            .collect()
-        )
-        entries = []
-        for r in counts:
-            entries.append(
-                {
-                    "path": os.path.relpath(_uri_to_local(r["_path"]), self.root),
-                    "rows": r["count"],
-                    "schema_id": schema_id,
-                }
-            )
-        entries.sort(key=lambda e: e["path"])
-        return {"*": entries}
 
     def _evolve_for(self, snap: dict, incoming: T.StructType) -> tuple[dict, T.StructType, str]:
         """Evolve the snapshot's schema catalog for an incoming batch
@@ -1360,7 +1298,6 @@ class LakeTable:
         deleted_col: str = "__deleted",
         checkpoint: dict | None = None,
         lineage: list[dict] | None = None,
-        rows_hint: int | None = None,
         validate=None,
     ) -> int:
         """MERGE INTO (upsert) — the north_rule core.
@@ -1394,7 +1331,7 @@ class LakeTable:
         plan and re-executes deterministically on retry.
         """
         return self._retry_concurrent(
-            lambda: self._merge_once(batch, deleted_col, checkpoint, lineage, rows_hint, validate),
+            lambda: self._merge_once(batch, deleted_col, checkpoint, lineage, validate),
             "merge",
         )
 
@@ -1404,7 +1341,6 @@ class LakeTable:
         deleted_col: str,
         checkpoint: dict | None,
         lineage: list[dict] | None,
-        rows_hint: int | None,
         validate,
     ) -> int:
         snap = self.snapshot()
@@ -1415,18 +1351,12 @@ class LakeTable:
         schemas, evolved, sid = self._evolve_for(snap, batch_logical)
 
         if snap.get("merge_mode") == "mor":
-            # merge-on-read: append delta files only — O(batch) work, no
-            # join, no rewrite. read()/compact() LWW-collapse later.
-            # Deltas are transient (compaction rewrites them under the
-            # session codec, zstd) → cheap snappy on the hot write path.
-            # Unbucketed layout additionally skips the repartition
-            # shuffle: the whole ingest is map-only.
-            if snap.get("delta_layout", "bucketed") == "unbucketed":
-                new_files = self._write_delta_files(conform(batch, evolved), sid)
-            else:
-                new_files = self._write_files(
-                    conform(batch, evolved), snap, sid, rows_hint=rows_hint, codec="snappy"
-                )
+            # merge-on-read: append map-only delta files — O(batch) work,
+            # no join, no rewrite, no shuffle. read()/compact_deltas()
+            # LWW-collapse later. Deltas are transient (folds rewrite
+            # them under the session codec, zstd) → cheap snappy on the
+            # hot write path.
+            new_files = self._write_files(conform(batch, evolved), snap, sid, codec="snappy", map_only=True)
             if validate is not None:
                 # post-write, PRE-COMMIT check (e.g. the runner's
                 # optimistic-parse schema-drift probe): raising here
@@ -1443,7 +1373,8 @@ class LakeTable:
                     "operation": "merge-mor",
                     "delta_rows": sum(f["rows"] for fl in new_files.values() for f in fl),
                 },
-                set_needs_collapse=True,
+                # a batch that landed no rows leaves nothing to collapse
+                set_needs_collapse=bool(new_files),
             )
 
         # --- bucket pruning: which buckets does this batch touch? -------
@@ -1514,23 +1445,6 @@ class LakeTable:
     # ------------------------------------------------------------------
     # maintenance
     # ------------------------------------------------------------------
-
-    def _read_entries(self, entries: list[dict], snap: dict) -> DataFrame:
-        """Conformed union over an explicit manifest-entry list."""
-        current = self.schema(snap)
-        by_schema: dict[str, list[str]] = {}
-        for f in entries:
-            by_schema.setdefault(f["schema_id"], []).append(os.path.join(self.root, f["path"]))
-        if not by_schema:
-            return local_frame(self.spark, [], current)
-        parts = []
-        for sid, paths in by_schema.items():
-            file_schema = T.StructType.fromJson(json.loads(snap["schemas"][sid]))
-            parts.append(conform(self.spark.read.schema(file_schema).parquet(*paths), current))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
 
     def _added_entries(self, prev: dict, snap: dict) -> list[dict]:
         """File entries `snap` added relative to `prev`. Fast path: an
@@ -1697,9 +1611,8 @@ class LakeTable:
         — the observed-state trigger for auto-compaction (Iceberg/Hudi
         gate maintenance on accumulated deltas, not on a wall-clock or
         batch-count knob). Metadata-only: counts '*' pseudo-bucket
-        entries (unbucketed MoR deltas) plus un-collapsed files in real
-        buckets (bucketed layout); zero when the table needs no
-        collapse."""
+        entries (map-only MoR deltas) plus real-bucket files without the
+        ``collapsed`` tag; zero when the table needs no collapse."""
         return self.outstanding_delta_stats(snap)[0]
 
     def outstanding_delta_stats(self, snap: dict | None = None) -> tuple[int, int, int]:
@@ -1726,18 +1639,29 @@ class LakeTable:
         return d_files, d_rows, c_rows
 
     def compact_deltas(self, sort: bool = False) -> int:
-        """MINOR compaction: fold outstanding MoR deltas into a collapsed
-        bucket/day layout, rewriting just the buckets the delta keys
+        """MINOR compaction: fold the outstanding MoR files into a
+        collapsed bucket/day layout, rewriting just the buckets they
         touch — O(deltas + touched buckets), not O(table). At 10^10 rows
         the periodic maintenance loop cannot afford compact()'s
         full-table rewrite; this is the Iceberg/Hudi minor-compaction
-        equivalent. Dispatches on the persisted delta layout: unbucketed
-        deltas live under the '*' pseudo-bucket; bucketed deltas are
-        folded per multi-file bucket (_fold_bucketed). No-op when no
-        deltas are outstanding. Auto-retries on a lost commit race
-        (recompute-from-current, see _retry_concurrent) — a compactor
-        racing a live MoR appender converges instead of failing the
-        maintenance loop.
+        equivalent.
+
+        Outstanding files are the ones outstanding_delta_stats counts:
+        the '*' deltas plus every real-bucket file a fold or rewrite did
+        not write (such files lack the ``collapsed`` tag — appends, and
+        deltas of tables written with bucketed deltas). A fold's output
+        is key-unique and covers its whole bucket, so an all-collapsed
+        bucket provably holds no duplicate keys; a file-count trigger
+        would be wrong both ways (one un-collapsed file can hold several
+        versions of a key; a collapsed bucket can span several day/salt
+        files). The touched buckets are those holding un-collapsed files
+        plus those the '*' delta keys hash to; all their files and the
+        '*' deltas are LWW-reduced with the same reduce read() applies
+        (_collapse), so the fold never changes what read() returns. No-op
+        when the table needs no collapse. Auto-retries on a lost commit
+        race (recompute-from-current, see _retry_concurrent) — a
+        compactor racing a live MoR appender converges instead of
+        failing the maintenance loop.
 
         sort=False (default): bin-packing fold, hash-salted writers —
         the cheap shape for the INLINE ingest-cadence compaction.
@@ -1751,126 +1675,49 @@ class LakeTable:
 
     def _compact_deltas_once(self, sort: bool = False) -> int:
         snap = self.snapshot()
-        star = snap["buckets"].get("*")
-        if not star:
-            if snap.get("needs_collapse"):
-                # delta_layout="bucketed": deltas land in real buckets,
-                # not under '*' — fold those instead of no-opping (a
-                # silent no-op here leaves needs_collapse set forever:
-                # every read pays the LWW collapse and file counts grow
-                # unboundedly)
-                return self._fold_bucketed(snap, sort)
+        if not snap.get("needs_collapse"):
             return snap["version"]
-        current = self.schema(snap)
-        keys = self._key_cols(snap)
-        order_by = [c for c in snap["order_by"] if c in [f.name for f in current.fields]]
-
-        deltas = self._collapse(self._read_entries(star, snap), snap)
-        affected = {
-            str(r[0]) for r in deltas.select(self._bucket_expr(snap).alias("_b")).distinct().collect()
+        touched = {
+            b for b, files in snap["buckets"].items() if any(b == "*" or not f.get("collapsed") for f in files)
         }
-        base_entries = [
-            f for b, files in snap["buckets"].items() if b in affected for f in files
-        ]
-        target = self._read_entries(base_entries, snap)
-        merged = self._cow_combine(target, deltas, keys, order_by, current)
-        # rows_hint (manifest row counts, an upper bound) caps the
-        # salted writer fan-out — an unhinted fold shatters small
-        # outputs into 2P files across bucket×day dirs
-        fold_rows = sum(f["rows"] for f in base_entries) + sum(f["rows"] for f in star)
-        new_files = {
-            b: [{**f, "collapsed": True} for f in fs]
-            for b, fs in self._write_files(
-                merged, snap, snap["current_schema_id"], rows_hint=fold_rows,
+        if "*" in touched:
+            # '*' deltas carry rows of every bucket: fold the buckets
+            # their keys hash to
+            touched |= {
+                str(r[0])
+                for r in self._read_entries(snap["buckets"]["*"], snap)
+                .select(self._bucket_expr(snap).alias("_b"))
+                .distinct()
+                .collect()
+            }
+        consumed = {b: snap["buckets"].get(b, []) for b in touched}
+        entries = [f for files in consumed.values() for f in files]
+        # rows_hint (manifest row counts, an upper bound) caps the salted
+        # writer fan-out — an unhinted fold shatters small outputs into
+        # 2P files across bucket×day dirs. Nothing to fold (the flag is
+        # set but every file is collapsed): a metadata-only flag clear.
+        new_files = (
+            self._write_collapsed(
+                self._collapse(self._read_entries(entries, snap), snap),
+                snap,
+                rows_hint=sum(f["rows"] for f in entries),
                 cluster_by_key=sort,
-            ).items()
-        }
-
+            )
+            if entries
+            else {}
+        )
         # validated rebase: deltas appended by a LIVE MoR writer while
         # this fold ran survive under '*' and re-raise needs_collapse;
         # only a concurrent touch of the folded files (another
         # compactor) forces the recompute retry
         return self._commit_rewrite(
             snap,
-            consumed={
-                "*": star,
-                **{b: snap["buckets"].get(b, []) for b in affected},
-            },
+            consumed=consumed,
             replaced=new_files,
             summary={
                 "operation": "compact-deltas",
-                "delta_files": len(star),
-                "affected_buckets": sorted(int(b) for b in affected),
-            },
-        )
-
-    def _fold_bucketed(self, snap: dict, sort: bool = False) -> int:
-        """Minor compaction for bucketed-delta MoR tables: LWW-collapse
-        every bucket holding a file NOT produced by a collapse. Manifest
-        entries written by a fold/compact carry ``collapsed: true`` —
-        one fold's output is key-unique across all its files, and a fold
-        rewrites its whole bucket, so an all-collapsed bucket provably
-        has no duplicate keys. A mere file-count trigger is wrong both
-        ways: a single un-collapsed file can hold several versions of a
-        key (MoR merges append batches un-deduped, and the write salt is
-        keyed, so every version of a key lands in one file — clearing
-        the flag on it would resurrect superseded/deleted rows), and a
-        collapsed bucket can legitimately span several files (day/salt
-        splits — refolding it forever would never converge). Work is
-        O(buckets touched since the last fold); once every bucket is
-        all-collapsed, needs_collapse clears and reads skip the LWW
-        aggregate. One caveat: tables written before the tag existed
-        have no `collapsed` entries, so their FIRST fold rewrites every
-        bucket (one-time O(table) migration; subsequent folds are
-        O(touched))."""
-        affected = {
-            b
-            for b, files in snap["buckets"].items()
-            if files and any(not f.get("collapsed") for f in files)
-        }
-        if not affected:
-            # every file is collapse-produced → table is key-unique. If
-            # the flag is still set (e.g. an empty-batch merge set it
-            # without landing files), clear it with a metadata-only
-            # commit so reads stop paying the LWW aggregate and
-            # days-ranged reads regain file-level pruning.
-            if not snap.get("needs_collapse"):
-                return snap["version"]
-            # metadata-only flag clear; a winner's concurrent additions
-            # re-raise the flag via the rebase's winner_added check
-            return self._commit_rewrite(
-                snap,
-                consumed={},
-                replaced={},
-                summary={
-                    "operation": "compact-deltas",
-                    "delta_files": 0,
-                    "affected_buckets": [],
-                },
-            )
-        entries = [f for b in affected for f in snap["buckets"][b]]
-        folded = self._collapse(self._read_entries(entries, snap), snap)
-        new_files = {
-            b: [{**f, "collapsed": True} for f in fs]
-            for b, fs in self._write_files(
-                folded,
-                snap,
-                snap["current_schema_id"],
-                rows_hint=sum(f["rows"] for f in entries),
-                cluster_by_key=sort,
-            ).items()
-        }
-        # every folded bucket is now all-collapsed; winner-added files
-        # (a live bucketed-delta writer) survive the rebase and keep
-        # needs_collapse raised
-        return self._commit_rewrite(
-            snap,
-            consumed={b: snap["buckets"].get(b, []) for b in affected},
-            replaced=new_files,
-            summary={
-                "operation": "compact-deltas",
-                "delta_files": len(entries),
-                "affected_buckets": sorted(int(b) for b in affected),
+                "delta_files": self.outstanding_delta_files(snap),
+                "affected_buckets": sorted(int(b) for b in touched if b != "*"),
             },
         )
 
@@ -1881,14 +1728,7 @@ class LakeTable:
         On merge-on-read tables this also folds outstanding deltas (LWW
         collapse), after which reads are plain scans again. Auto-retries
         on a lost commit race (recompute-from-current)."""
-
-        def df_fn(snap: dict) -> DataFrame:
-            df = self._read_raw(version=snap["version"])
-            if snap.get("needs_collapse"):
-                df = self._collapse(df, snap)  # keeps tombstone winners
-            return df
-
-        return self._retry_concurrent(lambda: self._rewrite_all(df_fn, "compact"), "compact")
+        return self._retry_concurrent(lambda: self._rewrite_all("compact"), "compact")
 
     def rescale(self, new_num_buckets: int) -> int:
         """Bucket-count evolution — the `bucket(N, key)` analogue of
@@ -1898,8 +1738,8 @@ class LakeTable:
         MERGE bucket scan; rescaling to 4096 restores O(rows/4096)
         bucket-pruned merges and read_keys lookups.
 
-        One committed full rewrite under the NEW layout (same machinery
-        as compact: LWW-folds outstanding MoR deltas, keeps tombstone
+        One committed full rewrite under the NEW layout (compact's
+        rewrite: LWW-folds outstanding MoR deltas, keeps tombstone
         winners, key-clustered output so zone maps stay discriminating).
         Unlike compact, the commit is NOT rebaseable: a concurrent
         winner's files were bucketed under the old layout, so any race
@@ -1912,40 +1752,8 @@ class LakeTable:
         derives the bucket expr from ITS snapshot's num_buckets."""
         if int(new_num_buckets) < 1:
             raise ValueError(f"new_num_buckets must be >= 1, got {new_num_buckets}")
-        new_num_buckets = int(new_num_buckets)
-
-        def attempt() -> int:
-            snap = self.snapshot()
-            if snap["num_buckets"] == new_num_buckets:
-                return snap["version"]
-            df = self._read_raw(version=snap["version"])
-            if snap.get("needs_collapse"):
-                df = self._collapse(df, snap)  # keeps tombstone winners
-            staged = {**snap, "num_buckets": new_num_buckets}
-            total = sum(f["rows"] for fl in snap["buckets"].values() for f in fl)
-            new_files = {
-                b: [{**f, "collapsed": True} for f in fs]
-                for b, fs in self._write_files(
-                    df,
-                    staged,
-                    snap["current_schema_id"],
-                    rows_hint=total or None,
-                    cluster_by_key=True,
-                ).items()
-            }
-            return self._commit_rewrite(
-                snap,
-                consumed={b: list(fs) for b, fs in snap["buckets"].items()},
-                replaced=new_files,
-                summary={
-                    "operation": "rescale",
-                    "from_buckets": snap["num_buckets"],
-                    "to_buckets": new_num_buckets,
-                },
-                extra_props={"num_buckets": new_num_buckets},
-            )
-
-        return self._retry_concurrent(attempt, "rescale")
+        n = int(new_num_buckets)
+        return self._retry_concurrent(lambda: self._rewrite_all("rescale", num_buckets=n), "rescale")
 
     def purge_tombstones(self) -> int:
         """Drop retained delete tombstones. Safe once no replay older
@@ -1953,40 +1761,47 @@ class LakeTable:
         from the checkpoint forward). Auto-retries on a lost commit
         race (recompute-from-current)."""
         return self._retry_concurrent(
-            lambda: self._rewrite_all(
-                lambda snap: self.read(version=snap["version"], include_deleted=False),
-                "purge-tombstones",
-            ),
-            "purge_tombstones",
+            lambda: self._rewrite_all("purge-tombstones", include_deleted=False), "purge_tombstones"
         )
 
-    def _rewrite_all(self, df_fn, operation: str) -> int:
-        """One full-table rewrite attempt against the CURRENT snapshot;
-        `df_fn(snap)` builds the replacement rows pinned at that
-        version. Raises ConcurrentCommitError if the table moved."""
+    def _write_collapsed(self, df: DataFrame, snap: dict, **kwargs) -> dict[str, list[dict]]:
+        """Write key-unique fold/rewrite output under the current schema,
+        tagging every entry ``collapsed`` so compact_deltas never refolds
+        it."""
+        return {
+            b: [{**f, "collapsed": True} for f in files]
+            for b, files in self._write_files(df, snap, snap["current_schema_id"], **kwargs).items()
+        }
+
+    def _rewrite_all(self, operation: str, include_deleted: bool = True, num_buckets: int | None = None) -> int:
+        """One full-table rewrite attempt against the CURRENT snapshot:
+        its LWW-collapsed rows (tombstones dropped unless
+        include_deleted), key-clustered. `num_buckets` (rescale) writes
+        under that bucket count and is a no-op when the table already
+        has it. Raises ConcurrentCommitError if the table moved."""
         snap = self.snapshot()
-        df = df_fn(snap)
-        sid = snap["current_schema_id"]
-        # a full rewrite's output is key-unique — mark it so the
-        # bucketed-delta minor fold (_fold_bucketed) skips these files.
+        if num_buckets == snap["num_buckets"]:
+            return snap["version"]
+        df = self.read(version=snap["version"], include_deleted=include_deleted)
+        layout = {} if num_buckets is None else {"num_buckets": num_buckets}
+        summary = {"operation": operation}
+        if layout:
+            summary.update(from_buckets=snap["num_buckets"], to_buckets=num_buckets)
         # rows_hint (manifest counts) keeps writer fan-out proportional
         # to the data: ~50k+ rows per write task at any table size
         total = sum(f["rows"] for fl in snap["buckets"].values() for f in fl)
-        new_files = {
-            b: [{**f, "collapsed": True} for f in fs]
-            for b, fs in self._write_files(
-                df, snap, sid, rows_hint=total or None, cluster_by_key=True
-            ).items()
-        }
+        new_files = self._write_collapsed(df, {**snap, **layout}, rows_hint=total or None, cluster_by_key=True)
         # full rewrite consumed EVERY file at `snap`; a winner that only
         # appended (live MoR deltas) rebases cleanly — its files survive
         # and needs_collapse re-raises; a winner that rewrote anything
-        # forces the recompute retry
+        # (or any winner at all under a layout change) forces the
+        # recompute retry
         return self._commit_rewrite(
             snap,
             consumed={b: list(fs) for b, fs in snap["buckets"].items()},
             replaced=new_files,
-            summary={"operation": operation},
+            summary=summary,
+            extra_props=layout or None,
         )
 
     def fsck(self, deep: bool = False) -> dict:

@@ -94,10 +94,6 @@ class PipelineConfig:
     # schema drift) — see CdcPipeline._process_fast
     fast_path: bool = True
     merge_mode: str = "mor"  # mor: O(batch) ingest; cow: rewrite-on-merge (create-time only)
-    # MoR delta file layout: 'unbucketed' = map-only writes (no shuffle
-    # on the ingest hot path; compaction folds into the bucket/day
-    # layout) or 'bucketed' = shuffle at write for pre-compaction pruning
-    delta_layout: str = "unbucketed"
     compact_every: int | None = None  # fold MoR deltas every N batches
     # auto-compaction: trigger the minor fold from OBSERVED table state
     # (outstanding delta files >= threshold) instead of the static
@@ -308,7 +304,6 @@ class CdcPipeline:
                 order_by=self.cfg.order_by,
                 merge_mode=self.cfg.merge_mode,
                 partition_ts_col=self.cfg.partition_ts_col,
-                delta_layout=self.cfg.delta_layout,
                 storage=self.storage,
             ))
         except ConcurrentCommitError:
@@ -894,7 +889,6 @@ class CdcPipeline:
                 deduped,
                 checkpoint=checkpoint if (is_last and not dlq) else None,
                 lineage=[{**checkpoint, **group_record}],
-                rows_hint=g.row_count_hint,
             )
             n_dead = int(dead_obs.get["n_dead"] or 0)
             if dlq:

@@ -62,8 +62,6 @@ def main(argv: list[str] | None = None) -> int:
     r.add_argument("--batch-window", type=int, default=1_000_000)
     r.add_argument("--batch-events", type=int, default=None, help="event-count-balanced windows")
     r.add_argument("--merge-mode", default="mor", choices=["mor", "cow"])
-    r.add_argument("--delta-layout", default="unbucketed", choices=["unbucketed", "bucketed"],
-                   help="MoR delta files: map-only unbucketed writes vs shuffled bucket layout")
     r.add_argument(
         "--key",
         default="url",
@@ -269,7 +267,6 @@ def main(argv: list[str] | None = None) -> int:
                 dead_letter=args.dead_letter,
                 wap=args.wap,
                 merge_mode=args.merge_mode,
-                delta_layout=args.delta_layout,
                 compact_every=args.compact_every,
                 auto_compact=args.auto_compact,
                 auto_compact_min_deltas=args.auto_compact_min_deltas,

@@ -1,6 +1,6 @@
-"""LWW dedup: the three implementations (window / agg / salted) must be
-exactly equivalent — including on skewed keys and order-column ties
-broken by offset (SURVEY.md 'hard parts': salted == unsalted)."""
+"""LWW dedup: the engine's reduce (lww_agg) must equal the textbook
+window form exactly — including on skewed keys and order-column ties
+broken by offset."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -9,7 +9,6 @@ from debezium_server_batch_spark.operators.dedup import (
     dedup_paragraphs,
     exact_dedup,
     lww_agg,
-    lww_salted,
     lww_window,
 )
 
@@ -43,8 +42,7 @@ def _sorted_rows(df):
 def test_three_implementations_agree(skewed):
     w = _sorted_rows(lww_window(skewed, order_by=ORDER))
     a = _sorted_rows(lww_agg(skewed, order_by=ORDER))
-    s = _sorted_rows(lww_salted(skewed, order_by=ORDER, salt_buckets=7))
-    assert w == a == s
+    assert w == a
 
 
 def test_one_row_per_key_and_winner_is_max(skewed):

@@ -271,7 +271,7 @@ def test_mor_days_read_does_not_resurrect_superseded_rows(spark, tmp_path):
     t = LakeTable.create(
         spark, str(tmp_path / "md"), schema, key_col="url", num_buckets=2,
         order_by=("__lsn",), partition_ts_col="warc_ts",
-        merge_mode="mor", delta_layout="unbucketed",
+        merge_mode="mor",
     )
     d1, d2 = dt.datetime(2024, 1, 1, 12), dt.datetime(2024, 1, 2, 12)
     t.merge(spark.createDataFrame(
@@ -352,7 +352,7 @@ def test_mor_unbucketed_deltas_map_only_then_compact(spark, tmp_path):
     bucket layout."""
     t = LakeTable.create(
         spark, str(tmp_path / "u"), SCHEMA, key_col="url", num_buckets=4,
-        order_by=("__lsn",), merge_mode="mor", delta_layout="unbucketed",
+        order_by=("__lsn",), merge_mode="mor",
     )
     t.merge(_batch(spark, [("a", "t1", 1, False), ("b", "t1", 2, False)]))
     t.merge(_batch(spark, [("a", "t2", 3, False), ("b", None, 4, True), ("c", "t1", 5, False)]))
@@ -385,7 +385,7 @@ def test_compact_deltas_incremental(spark, tmp_path):
     produce."""
     t = LakeTable.create(
         spark, str(tmp_path / "ic"), SCHEMA, key_col="url", num_buckets=8,
-        order_by=("__lsn",), merge_mode="mor", delta_layout="unbucketed",
+        order_by=("__lsn",), merge_mode="mor",
     )
     t.merge(_batch(spark, [(f"u{i}", "t0", i, False) for i in range(40)]))
     t.compact()  # establish a bucketed base
@@ -449,7 +449,7 @@ def test_read_keys_zone_map_prunes_files_within_bucket(spark, tmp_path):
 
     t = LakeTable.create(
         spark, str(tmp_path / "zm"), SCHEMA, key_col="url", num_buckets=1,
-        order_by=("__lsn",), merge_mode="mor", delta_layout="unbucketed",
+        order_by=("__lsn",), merge_mode="mor",
     )
     # 120k rows in two disjoint key ranges → the fold range-splits the
     # single bucket into ~3 files with DISJOINT key zones; with 1 hash
@@ -481,7 +481,7 @@ def test_changes_incremental_changelog(spark, tmp_path):
     pipelines without re-scanning the table."""
     t = LakeTable.create(
         spark, str(tmp_path / "ch"), SCHEMA, key_col="url", num_buckets=4,
-        order_by=("__lsn",), merge_mode="mor", delta_layout="unbucketed",
+        order_by=("__lsn",), merge_mode="mor",
     )
     v1 = t.merge(_batch(spark, [("a", "t1", 1, False), ("b", "t1", 2, False)]))
     v2 = t.merge(_batch(spark, [("a", "t2", 3, False), ("b", None, 4, True)]))
@@ -543,7 +543,7 @@ def test_changes_over_cow_merge_commits(spark, tmp_path):
 def _mor_table(spark, path):
     return LakeTable.create(
         spark, str(path), SCHEMA, key_col="url", num_buckets=4,
-        order_by=("__lsn",), merge_mode="mor", delta_layout="unbucketed",
+        order_by=("__lsn",), merge_mode="mor",
     )
 
 
@@ -779,7 +779,7 @@ def test_compact_deltas_auto_retries_on_concurrent_commit(spark, tmp_path):
     root = str(tmp_path / "race")
     t = LakeTable.create(
         spark, root, SCHEMA, key_col="url", num_buckets=4,
-        order_by=("__lsn",), merge_mode="mor", delta_layout="unbucketed",
+        order_by=("__lsn",), merge_mode="mor",
     )
     t.merge(_batch(spark, [("a", "t1", 1, False), ("b", "t1", 2, False)]))
     t.merge(_batch(spark, [("a", "t2", 3, False)]))
@@ -823,7 +823,7 @@ def test_two_writer_append_compact_race_converges(spark, tmp_path):
     root = str(tmp_path / "two")
     LakeTable.create(
         spark, root, SCHEMA, key_col="url", num_buckets=4,
-        order_by=("__lsn",), merge_mode="mor", delta_layout="unbucketed",
+        order_by=("__lsn",), merge_mode="mor",
     )
     errors = []
 
@@ -861,7 +861,7 @@ def test_changes_after_vacuum_fails_clearly(spark, tmp_path):
     partial changelog — consumers must re-sync from a full read."""
     t = LakeTable.create(
         spark, str(tmp_path / "cv"), SCHEMA, key_col="url", num_buckets=2,
-        order_by=("__lsn",), merge_mode="mor", delta_layout="unbucketed",
+        order_by=("__lsn",), merge_mode="mor",
     )
     t.merge(_batch(spark, [("a", "t1", 1, False)]))
     v1 = t.current_version()
@@ -881,53 +881,56 @@ def test_transient_write_failure_retries_exactly_once(spark, tmp_path):
     fails 'transiently'. The bounded retry must land the window EXACTLY
     once (no duplicate rows — the failed attempt's files stay
     unreferenced orphans), and vacuum reclaims the orphans. Mirrors the
-    reference's BigQuery retry discipline (r2 verdict next-round #5)."""
+    reference's BigQuery retry discipline (r2 verdict next-round #5).
+    Covers both merge modes: the CoW bucketed rewrite and the MoR
+    map-only delta write."""
     from debezium_server_batch_spark.plans.laketable import (
         SchemaEvolutionError,
         TransientWriteError,
     )
 
-    t = LakeTable.create(
-        spark, str(tmp_path / "rw"), SCHEMA, key_col="url", num_buckets=4,
-        order_by=("__lsn",),
-    )
-    t.WRITE_BACKOFF_S = 0.0
-    real = t._write_files_once
-    calls = {"n": 0}
+    for mode in ("cow", "mor"):
+        t = LakeTable.create(
+            spark, str(tmp_path / f"rw-{mode}"), SCHEMA, key_col="url", num_buckets=4,
+            order_by=("__lsn",), merge_mode=mode,
+        )
+        t.WRITE_BACKOFF_S = 0.0
+        real = t._write_files_once
+        calls = {"n": 0}
 
-    def flaky(*a, **kw):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            real(*a, **kw)  # files hit disk, then the 'executor' dies
-            raise TransientWriteError("injected executor failure")
-        return real(*a, **kw)
+        def flaky(*a, **kw):
+            calls["n"] += 1
+            if calls["n"] == 1:
+                real(*a, **kw)  # files hit disk, then the 'executor' dies
+                raise TransientWriteError("injected executor failure")
+            return real(*a, **kw)
 
-    t._write_files_once = flaky
-    try:
-        t.merge(_batch(spark, [("a", "t1", 1, False), ("b", "t1", 2, False)]))
-    finally:
-        del t._write_files_once
-    assert calls["n"] == 2  # failed once, retried once
-    assert sorted(r["url"] for r in t.read().collect()) == ["a", "b"]  # exactly once
-    # keep all snapshots: only the failed attempt's orphans go (grace 0:
-    # no concurrent writer in this test)
-    orphans = t.vacuum(keep_last=10, orphan_grace_s=0.0)
-    assert orphans  # first attempt's unreferenced files reclaimed
-    assert sorted(r["url"] for r in t.read().collect()) == ["a", "b"]
+        t._write_files_once = flaky
+        try:
+            t.merge(_batch(spark, [("a", "t1", 1, False), ("b", "t1", 2, False)]))
+        finally:
+            del t._write_files_once
+        assert calls["n"] == 2, mode  # failed once, retried once
+        assert sorted(r["url"] for r in t.read().collect()) == ["a", "b"], mode  # exactly once
+        # keep all snapshots: only the failed attempt's orphans go (grace
+        # 0: no concurrent writer in this test)
+        orphans = t.vacuum(keep_last=10, orphan_grace_s=0.0)
+        assert orphans, mode  # first attempt's unreferenced files reclaimed
+        assert sorted(r["url"] for r in t.read().collect()) == ["a", "b"], mode
 
-    # deterministic errors must NOT retry
-    def always_schema_err(*a, **kw):
-        calls["n"] += 1
-        raise SchemaEvolutionError("bad plan")
+        # deterministic errors must NOT retry
+        def always_schema_err(*a, **kw):
+            calls["n"] += 1
+            raise SchemaEvolutionError("bad plan")
 
-    calls["n"] = 0
-    t._write_files_once = always_schema_err
-    try:
-        with pytest.raises(SchemaEvolutionError):
-            t.merge(_batch(spark, [("c", "t", 3, False)]))
-    finally:
-        del t._write_files_once
-    assert calls["n"] == 1
+        calls["n"] = 0
+        t._write_files_once = always_schema_err
+        try:
+            with pytest.raises(SchemaEvolutionError):
+                t.merge(_batch(spark, [("c", "t", 3, False)]))
+        finally:
+            del t._write_files_once
+        assert calls["n"] == 1, mode
 
 
 def test_object_store_storage_backend(spark, tmp_path):
@@ -1001,7 +1004,7 @@ def test_segmented_manifest_commit_metadata_flat(spark, tmp_path):
 
     t = LakeTable.create(
         spark, str(tmp_path / "sm"), SCHEMA, key_col="url", num_buckets=4,
-        order_by=("__lsn",), merge_mode="mor", delta_layout="unbucketed",
+        order_by=("__lsn",), merge_mode="mor",
     )
     meta = _os.path.join(str(tmp_path / "sm"), "_meta")
 
@@ -1031,67 +1034,119 @@ def test_segmented_manifest_commit_metadata_flat(spark, tmp_path):
 
 
 def test_compact_deltas_folds_bucketed_layout(spark, tmp_path):
-    """Regression (r2 ADVICE): on a delta_layout='bucketed' MoR table,
-    deltas land in real buckets, not '*'. compact_deltas() must fold
-    them (it used to be a permanent no-op: needs_collapse never cleared,
-    per-read LWW collapse and file counts grew unboundedly)."""
+    """Regression (r2 ADVICE): compact_deltas() folds the outstanding
+    deltas into the collapsed bucket layout and clears needs_collapse
+    (it used to be a permanent no-op on some layouts: per-read LWW
+    collapse and file counts grew unboundedly). With nothing
+    outstanding it is a no-op — the collapsed-file tags stop a refold of
+    day/salt-split outputs — and a later 1-key merge folds only its
+    bucket (O(touched), not O(table))."""
     t = LakeTable.create(
         spark, str(tmp_path / "bk"), SCHEMA, key_col="url", num_buckets=4,
-        order_by=("__lsn",), merge_mode="mor", delta_layout="bucketed",
+        order_by=("__lsn",), merge_mode="mor",
     )
     t.merge(_batch(spark, [(f"u{i}", "t0", i, False) for i in range(20)]))
     t.merge(_batch(spark, [("u0", "t1", 100, False), ("u1", None, 101, True)]))
     snap = t.snapshot()
-    assert "*" not in snap["buckets"] and snap["needs_collapse"] is True
-    n_files_before = sum(len(fl) for fl in snap["buckets"].values())
+    assert set(snap["buckets"]) == {"*"} and snap["needs_collapse"] is True
     expect = sorted(tuple(r) for r in t.read().collect())
 
     v = t.compact_deltas()
     snap = t.snapshot()
     assert snap["version"] == v
-    # every bucket held un-collapsed files → full fold → flag clears
-    assert snap["needs_collapse"] is False
-    assert sum(len(fl) for fl in snap["buckets"].values()) < n_files_before
+    assert "*" not in snap["buckets"] and snap["needs_collapse"] is False
+    assert all(f.get("collapsed") for fl in snap["buckets"].values() for f in fl)
     assert sorted(tuple(r) for r in t.read().collect()) == expect
     assert {r["url"]: r["text"] for r in t.read().collect()}["u0"] == "t1"
     assert "u1" not in {r["url"] for r in t.read().collect()}
-    # second call: nothing left to fold → no-op, version stable (the
-    # collapsed-file tags stop a refold of day/salt-split outputs)
+    # second call: nothing left to fold → no-op, version stable
     assert t.compact_deltas() == snap["version"]
     # steady state is O(touched): a 1-key merge folds only its bucket
+    before = {b: [f["path"] for f in fl] for b, fl in snap["buckets"].items()}
     t.merge(_batch(spark, [("u0", "t2", 200, False)]))
     t.compact_deltas()
     snap = t.snapshot()
     assert len(snap["summary"]["affected_buckets"]) == 1
     assert snap["needs_collapse"] is False
+    untouched = set(before) - {str(b) for b in snap["summary"]["affected_buckets"]}
+    assert all([f["path"] for f in snap["buckets"][b]] == before[b] for b in untouched)
     assert {r["url"]: r["text"] for r in t.read().collect()}["u0"] == "t2"
 
 
-def test_bucketed_fold_does_not_resurrect_intra_file_duplicates(spark, tmp_path):
-    """Regression (r3 review): a bucketed-delta MoR merge appends its
-    batch UN-deduped, and the write salt is keyed — so one file can
-    carry several versions of a key (incl. a tombstone). compact_deltas
-    must not clear needs_collapse for such single-file buckets: reads
-    after the fold must still LWW-collapse them."""
-    t = LakeTable.create(
-        spark, str(tmp_path / "bkd"), SCHEMA, key_col="url", num_buckets=2,
-        order_by=("__lsn",), merge_mode="mor", delta_layout="bucketed",
+def _legacy_bucketed_merge(t, df):
+    """Commit `df` the way a MoR merge did on tables created with
+    bucketed deltas: files in the real buckets, without the collapsed
+    tag, needs_collapse raised."""
+    snap = t.snapshot()
+    files = t._write_files(df, snap, snap["current_schema_id"], codec="snappy")
+    t._commit_additive(
+        files, t.schema(snap), None, None, {"operation": "merge-mor"}, set_needs_collapse=True
     )
-    # ONE merge with two versions of 'a' and a delete-after-insert of 'b'
-    t.merge(_batch(spark, [
+
+
+def test_bucketed_fold_does_not_resurrect_intra_file_duplicates(spark, tmp_path):
+    """Regression (r3 review): a MoR merge appends its batch UN-deduped,
+    so one file can carry several versions of a key (incl. a
+    tombstone). compact_deltas must LWW-collapse them, never just clear
+    needs_collapse over them. Holds for '*' deltas and for the untagged
+    real-bucket files of tables written with bucketed deltas."""
+    rows = [
         ("a", "old", 1, False), ("a", "new", 2, False),
         ("b", "live", 3, False), ("b", None, 4, True),
-    ]))
-    t.compact_deltas()
-    rows = {r["url"]: r["text"] for r in t.read().collect()}
-    assert rows == {"a": "new"}  # no duplicate 'a', no resurrected 'b'
-    # the fold itself collapsed the intra-file duplicates, so the flag
-    # may clear — but only because the duplicate file WAS rewritten
-    raw = {(r["url"], r["__lsn"]) for r in t._read_raw().collect()}
-    assert raw == {("a", 2), ("b", 4)}  # old versions physically folded away
+    ]
+    for name, write in (("star", LakeTable.merge), ("legacy", _legacy_bucketed_merge)):
+        t = LakeTable.create(
+            spark, str(tmp_path / name), SCHEMA, key_col="url", num_buckets=2,
+            order_by=("__lsn",), merge_mode="mor",
+        )
+        # ONE write with two versions of 'a' and a delete-after-insert of 'b'
+        write(t, _batch(spark, rows))
+        assert t.snapshot()["needs_collapse"] is True
+        assert t.outstanding_delta_files() > 0
+        t.compact_deltas()
+        snap = t.snapshot()
+        assert snap["needs_collapse"] is False and t.outstanding_delta_files() == 0
+        assert {r["url"]: r["text"] for r in t.read().collect()} == {"a": "new"}, name
+        raw = {(r["url"], r["__lsn"]) for r in t._read_raw().collect()}
+        assert raw == {("a", 2), ("b", 4)}, name  # old versions physically folded away
+        assert t.compact_deltas() == snap["version"]
+
+
+def test_compact_deltas_keeps_read_winner_on_order_tie(spark, tmp_path):
+    """The minor fold reduces with read()'s LWW (max over order_by, then
+    the full row), so folding never changes what a read returns — also
+    when a delta ties a base row on order_by."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "tie"), SCHEMA, key_col="url", num_buckets=2,
+        order_by=("__lsn",), merge_mode="mor",
+    )
+    t.merge(_batch(spark, [("k", "zzz", 5, False), ("x", "x1", 1, False)]))
     t.compact()
+    t.merge(_batch(spark, [("k", "aaa", 5, False)]))  # same __lsn as the base row
+    before = sorted(tuple(r) for r in t.read().collect())
+    assert ("k", "zzz", 5, False) in before
+    t.compact_deltas()
     assert t.snapshot()["needs_collapse"] is False
-    assert {r["url"]: r["text"] for r in t.read().collect()} == {"a": "new"}
+    assert sorted(tuple(r) for r in t.read().collect()) == before
+
+
+def test_empty_mor_merge_does_not_raise_collapse_flag(spark, tmp_path):
+    """An empty MoR batch lands no data file and leaves needs_collapse
+    clear — otherwise every read pays the LWW aggregate until the next
+    fold — while its checkpoint still commits."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "em"), SCHEMA, key_col="url", num_buckets=2,
+        order_by=("__lsn",), merge_mode="mor",
+    )
+    t.merge(_batch(spark, [("a", "t1", 1, False)]))
+    t.compact()
+    v = t.merge(_batch(spark, []), checkpoint={"batch_id": 7})
+    snap = t.snapshot()
+    assert snap["version"] == v and snap["checkpoint"] == {"batch_id": 7}
+    assert snap["needs_collapse"] is False
+    assert "*" not in snap["buckets"]
+    assert all(f["rows"] > 0 for fl in snap["buckets"].values() for f in fl)
+    assert [r["url"] for r in t.read().collect()] == ["a"]
 
 
 def test_commit_crash_atomicity_fuzz(spark, tmp_path):
@@ -1132,7 +1187,7 @@ def test_commit_crash_atomicity_fuzz(spark, tmp_path):
         root = str(tmp_path / f"fz{crash_at}")
         t = LakeTable.create(
             spark, root, SCHEMA, key_col="url", num_buckets=2,
-            order_by=("__lsn",), merge_mode="mor", delta_layout="unbucketed",
+            order_by=("__lsn",), merge_mode="mor",
         )
         t.merge(_batch(spark, b1))
         before = {(r["url"], r["text"]) for r in t.read().collect()}
@@ -1173,11 +1228,11 @@ def test_chained_pipeline_sync_incremental(spark, tmp_path):
 
     bronze = LakeTable.create(
         spark, str(tmp_path / "bronze"), SCHEMA, key_col="url", num_buckets=4,
-        order_by=("__lsn",), merge_mode="mor", delta_layout="unbucketed",
+        order_by=("__lsn",), merge_mode="mor",
     )
     silver = LakeTable.create(
         spark, str(tmp_path / "silver"), SCHEMA, key_col="url", num_buckets=2,
-        order_by=("__lsn",), merge_mode="mor", delta_layout="unbucketed",
+        order_by=("__lsn",), merge_mode="mor",
     )
     bronze.merge(_batch(spark, [("a", "t1", 1, False), ("b", "spam", 2, False)]))
     bronze.merge(_batch(spark, [("c", "t1", 3, False)]))
@@ -1216,7 +1271,7 @@ def test_chained_pipeline_sync_incremental(spark, tmp_path):
     # final parity vs recomputing silver from scratch
     scratch = LakeTable.create(
         spark, str(tmp_path / "scratch"), SCHEMA, key_col="url", num_buckets=2,
-        order_by=("__lsn",), merge_mode="mor", delta_layout="unbucketed",
+        order_by=("__lsn",), merge_mode="mor",
     )
     sync_incremental(bronze, scratch, transform=drop_spam)
     assert sorted(tuple(r) for r in silver.read().collect()) == sorted(
@@ -1241,7 +1296,7 @@ def test_sync_incremental_scrub_transform_canonical_key(spark, tmp_path):
     )
     mk = lambda root: LakeTable.create(  # noqa: E731
         spark, str(tmp_path / root), SCHEMA, key_col="url", num_buckets=2,
-        order_by=("__lsn",), merge_mode="mor", delta_layout="unbucketed",
+        order_by=("__lsn",), merge_mode="mor",
     )
     bronze, silver = mk("bronze"), mk("silver")
 
@@ -1289,11 +1344,11 @@ def test_sync_incremental_transform_failure_dead_letter(spark, tmp_path):
 
     bronze = LakeTable.create(
         spark, str(tmp_path / "bronze"), SCHEMA, key_col="url", num_buckets=2,
-        order_by=("__lsn",), merge_mode="mor", delta_layout="unbucketed",
+        order_by=("__lsn",), merge_mode="mor",
     )
     silver = LakeTable.create(
         spark, str(tmp_path / "silver"), SCHEMA, key_col="url", num_buckets=2,
-        order_by=("__lsn",), merge_mode="mor", delta_layout="unbucketed",
+        order_by=("__lsn",), merge_mode="mor",
     )
     dlq = str(tmp_path / "dlq")
     # deterministic failure on an immutable attribute: keys starting
@@ -1460,11 +1515,11 @@ def test_follow_loop_paces_and_converges(spark, tmp_path):
 
     bronze = LakeTable.create(
         spark, str(tmp_path / "b"), SCHEMA, key_col="url", num_buckets=2,
-        order_by=("__lsn",), merge_mode="mor", delta_layout="unbucketed",
+        order_by=("__lsn",), merge_mode="mor",
     )
     silver = LakeTable.create(
         spark, str(tmp_path / "s"), SCHEMA, key_col="url", num_buckets=2,
-        order_by=("__lsn",), merge_mode="mor", delta_layout="unbucketed",
+        order_by=("__lsn",), merge_mode="mor",
     )
     bronze.merge(_batch(spark, [("a", "t1", 1, False)]))
 
@@ -1732,7 +1787,7 @@ def test_rescale_preserves_state_and_rebuckets(spark, table):
 def test_rescale_folds_mor_deltas_and_keeps_tombstones(spark, tmp_path):
     t = LakeTable.create(
         spark, str(tmp_path / "m"), SCHEMA, key_col="url", num_buckets=2,
-        order_by=("__lsn",), merge_mode="mor", delta_layout="unbucketed",
+        order_by=("__lsn",), merge_mode="mor",
     )
     t.merge(_batch(spark, [("a", "t1", 1, False), ("b", "t1", 2, False)]))
     t.merge(_batch(spark, [("a", "t2", 3, False), ("b", None, 4, True)]))
@@ -1764,7 +1819,7 @@ def test_rescale_recomputes_on_concurrent_commit(spark, tmp_path):
     root = str(tmp_path / "race")
     t = LakeTable.create(
         spark, root, SCHEMA, key_col="url", num_buckets=2,
-        order_by=("__lsn",), merge_mode="mor", delta_layout="unbucketed",
+        order_by=("__lsn",), merge_mode="mor",
     )
     t.merge(_batch(spark, [("a", "t1", 1, False), ("b", "t1", 2, False)]))
     calls = {"n": 0}
@@ -1797,7 +1852,7 @@ def test_rescale_recomputes_on_concurrent_commit(spark, tmp_path):
 def test_changes_skips_rescale_commit(spark, tmp_path):
     t = LakeTable.create(
         spark, str(tmp_path / "c"), SCHEMA, key_col="url", num_buckets=2,
-        order_by=("__lsn",), merge_mode="mor", delta_layout="unbucketed",
+        order_by=("__lsn",), merge_mode="mor",
     )
     t.merge(_batch(spark, [("a", "t1", 1, False)]))          # v1
     t.rescale(4)                                              # v2 (maintenance)

@@ -64,7 +64,7 @@ def test_unbucketed_delta_write_is_shuffle_free(spark, tmp_path):
     )
     t = LakeTable.create(
         spark, str(tmp_path / "t"), schema, key_col="url", num_buckets=8,
-        order_by=("__lsn",), merge_mode="mor", delta_layout="unbucketed",
+        order_by=("__lsn",), merge_mode="mor",
     )
     batch = spark.createDataFrame([("a", "x", 1, False)], schema)
     assert "Exchange" not in _plan(conform(batch, t.schema()))

@@ -139,33 +139,3 @@ def test_spark_config_subset(cfg):
     assert all(k.startswith("spark.") for k in sub)
     assert all(cfg[k] == v for k, v in sub.items())
     assert sub == {k: v for k, v in cfg.items() if k.startswith("spark.")}
-
-
-# --------------------------------------------------------------------------
-# PNG decoder: round-trip property against the independent test-side
-# encoder (tests/test_multimodal._make_png) over random dimensions,
-# channel layouts, pixel contents, and per-row filter choices.
-# --------------------------------------------------------------------------
-
-
-@given(
-    st.integers(min_value=1, max_value=12),  # width
-    st.integers(min_value=1, max_value=12),  # height
-    st.sampled_from([(0, 1), (2, 3), (6, 4)]),  # (color_type, channels)
-    st.lists(st.integers(min_value=0, max_value=4), min_size=1, max_size=6),
-    st.integers(min_value=0, max_value=2**32 - 1),  # pixel seed
-)
-@settings(max_examples=40, deadline=None)
-def test_png_roundtrip_property(w, h, color, filters, seed):
-    import numpy as np
-
-    from debezium_server_batch_spark.operators.multimodal import _decode_png
-    from tests.test_multimodal import _make_png
-
-    color_type, nch = color
-    rng = np.random.default_rng(seed)
-    px = rng.integers(0, 256, size=(h, w, nch), dtype=np.uint8)
-    got_w, got_h, flat = _decode_png(_make_png(px, filters, color_type))
-    assert (got_w, got_h) == (w, h)
-    expect = px[:, :, :3] if nch == 4 else px
-    assert np.array_equal(flat, expect.reshape(-1))

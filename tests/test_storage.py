@@ -382,7 +382,7 @@ def test_laketable_commit_protocol_on_s3_surface(spark, tmp_path):
     )
     t = LakeTable.create(
         spark, root, schema, key_col="url", num_buckets=4,
-        order_by=("__lsn",), merge_mode="mor", delta_layout="unbucketed",
+        order_by=("__lsn",), merge_mode="mor",
         storage=st,
     )
     # metadata lives in the fake S3 keyspace, not on the local FS

@@ -33,7 +33,7 @@ def _batch(spark, rows):
 def table(spark, tmp_path):
     return LakeTable.create(
         spark, str(tmp_path / "t"), SCHEMA, key_col="url", num_buckets=4,
-        order_by=("__lsn",), merge_mode="mor", delta_layout="unbucketed",
+        order_by=("__lsn",), merge_mode="mor",
     )
 
 

@@ -94,7 +94,7 @@ def _ensure_table(spark, LakeTable, ConcurrentCommitError, root, schema, order_b
         try:
             LakeTable.create(
                 spark, root, schema, key_col=KEY, num_buckets=4,
-                order_by=order_by, merge_mode="mor", delta_layout="unbucketed",
+                order_by=order_by, merge_mode="mor",
             )
         except ConcurrentCommitError:
             pass  # a previous incarnation created it first
@@ -323,12 +323,12 @@ def main() -> None:
     shutil.rmtree(scratch_gold_root, ignore_errors=True)
     scratch = LakeTable.create(
         spark, scratch_root, s.schema(), key_col=KEY, num_buckets=4,
-        order_by=order_by, merge_mode="mor", delta_layout="unbucketed",
+        order_by=order_by, merge_mode="mor",
     )
     sync_incremental(b, scratch, transform=tf)
     scratch_gold = LakeTable.create(
         spark, scratch_gold_root, g.schema(), key_col=KEY, num_buckets=4,
-        order_by=order_by, merge_mode="mor", delta_layout="unbucketed",
+        order_by=order_by, merge_mode="mor",
     )
     sync_incremental(scratch, scratch_gold, transform=tf2)
 

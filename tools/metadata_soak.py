@@ -82,7 +82,7 @@ def main() -> None:
     )
     t = LakeTable.create(
         spark, root, schema, key_col="url", num_buckets=8,
-        order_by=("__lsn",), merge_mode="mor", delta_layout="unbucketed",
+        order_by=("__lsn",), merge_mode="mor",
         storage=storage,
     )
     meta_dir = os.path.join(root, "_meta")

@@ -1,6 +1,6 @@
 """Hot-key skew soak at the merge/dedup layer (r4 verdict next-round
 #3): a Zipf-shaped event set where ONE url owns ~5% of 10^7 events,
-LWW-deduped by the three property-tested-equal implementations
+LWW-deduped by the two property-tested-equal implementations
 (operators/dedup.py), with per-task straggler metrics pulled from the
 Spark REST API — the MEASURED version of the salting claim, not just
 the equality property test.
@@ -14,10 +14,7 @@ What it demonstrates, with numbers:
     the hot key on every input partition (partial_max map-side
     combine): the shuffle carries ≤ one row per (partition, key), no
     straggler;
-  * lww_salted (explicit two-phase (key, salt) → key reduce) bounds
-    the hot key to salt_buckets cells — same flat profile, the
-    pattern for planners without reliable partial aggregation;
-  * all three outputs are IDENTICAL (count + order-independent
+  * all outputs are IDENTICAL (count + order-independent
     full-row hash) — equality is asserted, not assumed.
 
 The event shape mirrors the reference's skew test, which floods one
@@ -66,7 +63,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from debezium_server_batch_spark.operators.dedup import lww_agg, lww_salted, lww_window
+    from debezium_server_batch_spark.operators.dedup import lww_agg, lww_window
     from debezium_server_batch_spark.session import build_session
 
     # UI on: the REST API is where per-task duration quantiles live
@@ -136,7 +133,6 @@ def main() -> None:
         "lww_window_naive": (lww_window, {GL: "-1"}),
         "lww_window_group_limit": (lww_window, {}),
         "lww_agg_partial": (lww_agg, {}),
-        "lww_salted_two_phase": (lww_salted, {}),
     }
     results, prints = {}, {}
     for name, (fn, conf) in variants.items():
