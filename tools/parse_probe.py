@@ -19,7 +19,6 @@ log_path, cores = sys.argv[1], int(sys.argv[2])
 from debezium_server_batch_spark.session import build_session  # noqa: E402
 from debezium_server_batch_spark.sources.synth import SCHEMA_V2  # noqa: E402
 
-os.environ.setdefault("SPARK_GRAFT_GC_THREADS", str(cores))
 spark = build_session(master=f"local[{cores}]", shuffle_partitions=cores)
 from pyspark.sql import functions as F  # noqa: E402
 from pyspark.sql import types as T  # noqa: E402

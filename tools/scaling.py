@@ -54,10 +54,14 @@ def run_leg(cores: int, log_path: str, workdir: str, batch_events: int) -> dict:
     # with the cluster. The sandbox's single shared block device does
     # not — measuring through it benchmarks the device, not the engine.
     # RAM-backed local dirs emulate per-node storage that scales.
+    # local[N] caps task threads but not the JVM's GC threads, so a
+    # low-N leg would borrow extra parallelism and skew the N→4N
+    # comparison; pin GC to the leg's width.
+    gc = f"-XX:ParallelGCThreads={cores} -XX:ConcGCThreads={max(1, cores // 4)}"
     env = {
         **os.environ,
         "SPARK_LOCAL_DIRS": os.path.join(workdir, "spark-local"),
-        "SPARK_GRAFT_GC_THREADS": str(cores),  # see session.py — honest N-thread legs
+        "JAVA_TOOL_OPTIONS": f"{os.environ.get('JAVA_TOOL_OPTIONS', '')} {gc}".strip(),
     }
     cmd = [
         sys.executable, os.path.join(REPO, "run_pipeline.py"),

@@ -21,7 +21,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 log_path, cores = sys.argv[1], int(sys.argv[2])
-os.environ.setdefault("SPARK_GRAFT_GC_THREADS", str(cores))
 
 from debezium_server_batch_spark.session import build_session  # noqa: E402
 
