@@ -17,6 +17,8 @@ Subcommands:
   rollback   roll a table back to an earlier snapshot (bad-batch recovery)
   describe   print table state (version, rows, files, deltas, checkpoints)
   fsck       consistency check: metadata graph vs data files (exit 1 on findings)
+  class-archive  build the driver JVM's class-data-sharing archive for this
+             JDK and Spark install; later sessions start from it
 """
 
 from __future__ import annotations
@@ -40,6 +42,37 @@ def _make_storage(name: str, fault_rate: float = 0.05, fault_seed: int = 0):
 
         return make_flaky_stack(fault_rate=fault_rate, seed=fault_seed)
     return None  # PosixStorage default
+
+
+def _class_archive(master: str | None) -> None:
+    """Dump the classes a small replay, scan, lookup and compaction load,
+    so that later sessions map them instead of loading them again."""
+    import os
+    import tempfile
+
+    from debezium_server_batch_spark.session import dump_class_archive
+
+    def workload(spark) -> None:
+        from debezium_server_batch_spark.plans.laketable import LakeTable
+        from debezium_server_batch_spark.sources.synth import generate_event_log, write_event_log
+        from debezium_server_batch_spark.streaming.runner import CdcPipeline, PipelineConfig
+
+        with tempfile.TemporaryDirectory() as d:
+            log, table = os.path.join(d, "log"), os.path.join(d, "table")
+            write_event_log(generate_event_log(spark, n_pages=400, n_hot=2, hot_k=16), log, n_files=4)
+            # small windows: the first takes the grouped path, later ones the fast path
+            cfg = PipelineConfig(log_path=log, table_root=table, batch_events=400, num_buckets=4)
+            CdcPipeline(spark, cfg).run()
+            t = LakeTable.load(spark, table)
+            keys = [r[0] for r in t.read().select("url").limit(4).collect()]
+            t.read_keys(keys).collect()
+            t.compact()
+            LakeTable.load(spark, table).read().count()
+
+    t0 = time.monotonic()
+    archive = dump_class_archive(workload, master=master)
+    print(json.dumps({"archive": archive, "bytes": os.path.getsize(archive),
+                      "sec": round(time.monotonic() - t0, 2)}))
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -199,7 +232,14 @@ def main(argv: list[str] | None = None) -> int:
     rb.add_argument("--fault-rate", type=float, default=0.05)
     rb.add_argument("--fault-seed", type=int, default=0)
 
+    sub.add_parser("class-archive", help="build the driver JVM's class-data-sharing "
+                   "archive for this JDK and Spark install; run it where the cache "
+                   "persists, once per install")
+
     args = p.parse_args(argv)
+    if args.cmd == "class-archive":
+        _class_archive(args.master)
+        return 0
 
     from pyspark.sql import SparkSession
 

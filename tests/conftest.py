@@ -9,8 +9,12 @@ from debezium_server_batch_spark.session import build_session  # noqa: E402
 
 
 @pytest.fixture(scope="session")
-def spark():
-    s = build_session(master="local[4]", shuffle_partitions=4, app_name="dsbs-tests")
+def spark(tmp_path_factory):
+    # an empty cache: the suite's session runs without a class archive,
+    # whatever the user's cache holds
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("XDG_CACHE_HOME", str(tmp_path_factory.mktemp("cache")))
+        s = build_session(master="local[4]", shuffle_partitions=4, app_name="dsbs-tests")
     yield s
     s.stop()
 
